@@ -152,10 +152,14 @@ object EntryQueries {
     * JVM/run from the parquet inputs — this moves work earlier, it does
     * not cache anything across runs. Spawned ONCE per (session, dir);
     * `SPARK_GRAFT_NO_PREFETCH=1` disables for A/B measurement. */
-  private val prefetched = ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+  // weakly keyed by session (the public API exposes no session id): a
+  // stopped session of a long-lived JVM stays collectable
+  private val prefetched = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
   private def prefetchFixtures(spark: SparkSession, dir: String): Unit = {
     if (sys.env.get("SPARK_GRAFT_NO_PREFETCH").contains("1")) return
-    if (!prefetched.add((spark, dir))) return
+    if (!prefetched.computeIfAbsent(spark,
+        _ => ConcurrentHashMap.newKeySet[String]()).add(dir)) return
     def daemon(name: String)(body: => Unit): Unit = {
       val t = new Thread(() =>
         try body catch { case e: Throwable =>
@@ -188,8 +192,8 @@ object EntryQueries {
     }
     daemon("warm") {
       spark.sparkContext.setJobDescription("prefetch: searcher warms")
-      val full = indexDirFull(spark, dir)
-      searcher(spark, full).warm(includeDocs = true)
+      val sw = searcher(spark, indexDirFull(spark, dir))
+      sw.warm(includeDocs = true)
       // one throwaway query per query-path FAMILY: the index-warmer
       // posture (Lucene/Elasticsearch warmers) — a long-lived engine
       // compiles its query shapes once, off the timed path. Whole-stage
@@ -198,32 +202,24 @@ object EntryQueries {
       // so a same-shaped warm query IS a cache hit for the real query
       // that follows. Warm words are tokenizer-feasible (pure a-z,
       // length ≥ 4) but absent from the corpus: every plan builds and
-      // compiles, every action touches ~no rows. The warms run on a
-      // PRIVATE Searcher, closed after: each query swaps the searcher's
-      // latest-query per-term cache, and churning the SHARED instance's
-      // cache would unpersist a concurrently-running entry's frame
-      // mid-action (measured: the early fts entries recomputed their
-      // shared frames per consumer branch, 1.8 s → 6.6 s). The compile
-      // cache being warmed is JVM-global, so a private instance warms
-      // it just as well. Failures are swallowed by the lane's catch
-      val sw = new Searcher(spark, new IndexStore(full))
-      try {
-        sw.searchBm25("graftwarm", 1).count()
-        sw.searchCount("graftwarm").count()
-        val corpus = docsCorpus(spark, dir)
-        sw.searchCountWithPhrases(corpus, """'warma wordb' AND "warmc"""")
-          .count()
-        sw.searchBm25WithPhrases(corpus, """'warma wordb' AND "warmc"""",
-          k = 1).count()
-        val syn = spark.createDataFrame(Seq(("warma", "warmb")))
-          .toDF("term", "synonym")
-        sw.searchCountSynonyms(syn, "\"warma\"").count()
-        sw.searchBm25Synonyms(syn, "\"warma\"", k = 1).count()
-        sw.searchCountBatch(Seq("warma", "(warmb OR warmc)")).count()
-        sw.searchBm25Batch(Seq("warma", "(warmb OR warmc)"), k = 1).count()
-        sw.searchBm25Page("warma warmb", 1, Some(("", -1))).count()
-        sw.searchNear(corpus, "warma warmb", d = 2).count()
-      } finally sw.close()
+      // compiles, every action touches ~no rows. Queries keep no state
+      // on the Searcher, so the warms share it with the timed entries.
+      // Failures are swallowed by the lane's catch
+      sw.searchBm25("graftwarm", 1).count()
+      sw.searchCount("graftwarm").count()
+      val corpus = docsCorpus(spark, dir)
+      sw.searchCountWithPhrases(corpus, """'warma wordb' AND "warmc"""")
+        .count()
+      sw.searchBm25WithPhrases(corpus, """'warma wordb' AND "warmc"""",
+        k = 1).count()
+      val syn = spark.createDataFrame(Seq(("warma", "warmb")))
+        .toDF("term", "synonym")
+      sw.searchCountSynonyms(syn, "\"warma\"").count()
+      sw.searchBm25Synonyms(syn, "\"warma\"", k = 1).count()
+      sw.searchCountBatch(Seq("warma", "(warmb OR warmc)")).count()
+      sw.searchBm25Batch(Seq("warma", "(warmb OR warmc)"), k = 1).count()
+      sw.searchBm25Page("warma warmb", 1, Some(("", -1))).count()
+      sw.searchNear(corpus, "warma warmb", d = 2).count()
       val merged = indexDirMerged(spark, dir)
       searcher(spark, merged).warm(includeDocs = true)
       searcherAt(spark, merged, v = 1).warm(includeDocs = true)
@@ -265,17 +261,16 @@ object EntryQueries {
   private val StreamUserCap = 100
 
   // one long-lived Searcher per index (the REPL reuse pattern): parquet
-  // listing/schema plans build once, and the per-term cache stays bounded
-  // to the latest query per index. Keyed by (dir, committed version) so a
+  // listing/schema plans build once. Keyed by (dir, committed version) so a
   // snapshot committed at the same path after first use (merge/compact)
   // gets a fresh Searcher instead of the stale layer list.
   private val searcherCache = new ConcurrentHashMap[(String, Int), Searcher]()
   private def searcher(spark: SparkSession, indexDir: String): Searcher = {
     val store = new IndexStore(indexDir)
     val version = store.currentVersion.getOrElse(0)
-    // evict (and CLOSE — releasing its persisted per-term frame) any
-    // searcher pinned to a superseded version of this dir, so long-lived
-    // JVMs don't accumulate one leaked cache entry per merge/compact
+    // evict (and CLOSE — releasing its warm pins) any searcher pinned to
+    // a superseded version of this dir, so long-lived JVMs don't
+    // accumulate one leaked pair of pins per merge/compact
     searcherCache.forEach { (k, s) =>
       if (k._1 == indexDir && k._2 != version &&
           searcherCache.remove(k, s)) s.close()
@@ -287,12 +282,11 @@ object EntryQueries {
   // point-in-time searchers live in their own cache: a pinned snapshot is
   // immutable, so entries never need the current-version eviction above
   // (which would close a pinned searcher on every current-version fetch).
-  // Bounded: each cached searcher pins its latest query's per-term frame,
-  // so past a small cap every entry EXCEPT the one being requested is
-  // closed — a crude full-flush guard for long-lived JVMs exploring many
-  // snapshots (the catalog itself uses exactly one (dir, version) pair;
-  // a closed searcher handed out earlier degrades to recompute, never to
-  // wrong results — Spark recomputes unpersisted frames)
+  // Bounded: a warmed searcher pins its dictionary and doc keys, so past a
+  // small cap every entry EXCEPT the one being requested is closed — a
+  // crude full-flush guard for long-lived JVMs exploring many snapshots
+  // (the catalog itself uses exactly one (dir, version) pair; a closed
+  // searcher handed out earlier reads parquet again, never wrong results)
   private val asOfSearcherCache =
     new ConcurrentHashMap[(String, Int), Searcher]()
   private def searcherAt(spark: SparkSession, indexDir: String,

@@ -1,6 +1,9 @@
 package graft.search
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,7 +16,12 @@ import graft.tokenize.GraftPhraseCount
   * Spark shape (SURVEY.md §3.2): term list (tiny, driver) → dictionary
   * lookup with letter-partition pruning + parquet min/max file skipping (the
   * words_f jump-table analog) → postings join → explode/decode → per-term
-  * doc aggregation → boolean evaluation as joins → ranked output.
+  * doc aggregation → pivot to one row per doc → boolean evaluation as one
+  * column expression per doc ([[evalHits]]) → ranked output.
+  *
+  * A Searcher is safe to share across threads: queries build lazy frames
+  * and keep no per-query state. Only [[warm]] and [[close]] mutate it (the
+  * dictionary and doc-key pins), and they serialize on one lock.
   *
   * `asOf` pins the searcher to an OLDER committed snapshot version —
   * point-in-time search over the LSM store (the Elasticsearch PIT /
@@ -90,27 +98,12 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     case Some(del) => hits.join(broadcast(del), Seq("doc_id"), "left_anti")
   }
 
-  // the per-term frame of the LATEST query stays cached (repeat-query
-  // speed); issuing a new query or close() drops the previous one —
-  // a long-lived Searcher no longer accumulates persisted plans (r1 leak).
-  // All mutations go through cacheLock: a search service drives ONE
-  // Searcher from many client threads (the bench's qps phase does), and
-  // an unsynchronized swap would lose updates and leak persisted frames —
-  // an unpersist racing an in-flight job is safe (Spark recomputes the
-  // missing blocks), so correctness never depends on the lock, only
-  // resource hygiene does
-  private val cacheLock = new Object
-  // keyed by the query that built it: a REPEAT of the same query (the
-  // pagination walk, a REPL re-issue, a service's hot query) reuses the
-  // persisted frame instead of rebuilding and re-persisting an identical
-  // one — the second searchBm25Page call of a page walk was re-running
-  // the whole dict+postings scoring pass it had just materialized
-  private var cachedPerTerm: Option[(String, DataFrame)] = None
-  // a search() racing close() could otherwise persist a fresh per-term
-  // frame and swap it in AFTER close() drained the cache, leaking one
-  // persisted frame on a closed Searcher — the swap checks this flag
+  // the only mutable state: the warm pins. Queries hold no per-query
+  // state, so any number of client threads may share one Searcher; warm()
+  // and close() serialize on pinLock, and a warm() racing or following
+  // close() must not re-pin frames on a closed Searcher
+  private val pinLock = new Object
   private var isClosed = false
-
   private var dictWarmed = false
   private var docsWarmed = false
 
@@ -127,9 +120,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * `includeDocs` additionally pins the doc-key table (the paths.index
     * analog — one row per doc, MEMORY_AND_DISK so an executor short on
     * memory degrades to local disk instead of evicting). */
-  def warm(includeDocs: Boolean = false): Unit = cacheLock.synchronized {
-    // warm() racing (or following) close() must not re-pin frames on a
-    // closed Searcher — the same leak class the per-term swap guards
+  def warm(includeDocs: Boolean = false): Unit = pinLock.synchronized {
     if (isClosed) return
     if (!dictWarmed) {
       dict.persist(StorageLevel.MEMORY_AND_DISK).count()
@@ -141,21 +132,9 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     }
   }
 
-  /** Drop the previous query's cached per-term frame ONLY — the between-
-    * queries release. The warmed dict/docs survive: they are the point of
-    * [[warm]] (r3 review: routing this through close() silently unpersisted
-    * the dictionary on the FIRST query, defeating the REPL warm path). */
-  private[search] def dropPerTerm(): Unit = cacheLock.synchronized {
-    cachedPerTerm.foreach(_._2.unpersist(blocking = false))
-    cachedPerTerm = None
-  }
-
-  /** Release ALL cached state (per-term frame AND warmed tables) — call
-    * when done with the Searcher. */
-  def close(): Unit = cacheLock.synchronized {
+  /** Release the warm pins — call when done with the Searcher. */
+  def close(): Unit = pinLock.synchronized {
     isClosed = true
-    cachedPerTerm.foreach(_._2.unpersist(blocking = false))
-    cachedPerTerm = None
     if (dictWarmed) { dict.unpersist(blocking = false); dictWarmed = false }
     if (docsWarmed) { docs.unpersist(blocking = false); docsWarmed = false }
   }
@@ -224,92 +203,127 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
         org.apache.spark.sql.types.StructField(n, t) }))
 
-  /** DataFrame boolean-evaluation algebra over (doc_id, v) frames. */
-  private final class DfAlgebra(perTerm: Int => DataFrame)
-      extends ResultAlgebra[DataFrame] {
-    def empty: DataFrame = emptyDf(
-      "doc_id" -> org.apache.spark.sql.types.LongType,
-      "v" -> org.apache.spark.sql.types.DoubleType)
-    def term(i: Int): DataFrame = perTerm(i)
-    def or(acc: DataFrame, x: DataFrame): DataFrame =
-      acc.unionByName(x).groupBy($"doc_id").agg(sum($"v").as("v"))
-    def and(acc: DataFrame, x: DataFrame): DataFrame =
-      acc.join(x.withColumnRenamed("v", "v2"), Seq("doc_id"))
-        .select($"doc_id", ($"v" + $"v2").as("v"))
-    def not(acc: DataFrame, x: DataFrame): DataFrame =
-      acc.join(x, Seq("doc_id"), "left_anti")
-  }
-
-  /** Persist `df` as THE query-scoped cached frame: the previous one
-    * unpersists exactly once, whichever thread replaced it (a racing job
-    * on it just recomputes); a swap against a closed Searcher releases the
-    * fresh frame instead of storing it. `key` identifies the query that
-    * built `df`: when the current cached frame carries the same key, it
-    * IS this frame (per-term construction is deterministic against this
-    * Searcher's pinned snapshot), so it is returned as-is — repeat
-    * queries skip both the rebuild and the persist/unpersist churn. */
-  private def cacheSwap(key: String, df: => DataFrame): DataFrame =
-    cacheLock.synchronized {
-      cachedPerTerm match {
-        case Some((k, c)) if k == key && !isClosed => c
-        case _ =>
-          val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-          if (isClosed) cached.unpersist(blocking = false)
-          else {
-            cachedPerTerm.foreach(_._2.unpersist(blocking = false))
-            cachedPerTerm = Some((key, cached))
-          }
-          cached
-      }
+  /** The boolean evaluator's algebra over nullable per-doc columns, NULL
+    * meaning "doc absent": `or` keeps either side and adds where both are
+    * present, `and` adds where both are present, `not` keeps the left side
+    * where the right is absent — the reference's left fold
+    * (Search.cpp:144-281), one document at a time. `plus` is `+` for
+    * counts and scores, `concat` for retained term lists
+    * ([[explainScore]]). Each node becomes a named column appended to
+    * `nodes`, and later nodes read it by name: the projection chain grows
+    * linearly with the query, where one nested expression would repeat
+    * both operands of every `or` and grow exponentially. An absent
+    * operand (an empty subresult) folds away without a node. */
+  private final class ColumnAlgebra(leaf: Int => Column,
+      plus: (Column, Column) => Column,
+      nodes: ArrayBuffer[(String, Column)]) extends ResultAlgebra[Column] {
+    def empty: Column = Absent
+    def term(i: Int): Column = leaf(i)
+    private def node(c: Column): Column = {
+      val name = s"_n${nodes.length}"
+      nodes += name -> c
+      col(name)
     }
-
-  private def evalQuery(key: String, query: String,
-      perTermValue: => DataFrame): DataFrame = {
-    val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
-    if (!parsed.valid || parsed.searchWords.isEmpty)
-      return new DfAlgebra(_ => null).empty
-    val cached = cacheSwap(key, perTermValue)
-    val alg = new DfAlgebra(i => cached.filter($"term_idx" === i)
-      .select($"doc_id", $"v"))
-    parsed.eval(alg).getOrElse(new DfAlgebra(_ => null).empty)
+    def or(a: Column, x: Column): Column =
+      if (a eq Absent) x else if (x eq Absent) a
+      else node(coalesce(plus(a, x), a, x))
+    def and(a: Column, x: Column): Column =
+      if ((a eq Absent) || (x eq Absent)) Absent else node(plus(a, x))
+    def not(a: Column, x: Column): Column =
+      if ((a eq Absent) || (x eq Absent)) a else node(when(x.isNull, a))
   }
+
+  private val Absent: Column = lit(null)
+
+  /** THE boolean evaluator, for one query or a batch. The
+    * (term_idx, doc_id, v) per-term frame pivots to one row per doc —
+    * `t<i>` = the doc's value for term i, NULL when absent; `max` is
+    * exact because that frame holds one row per (term, doc) — and every
+    * query's tree evaluates over that row with [[ColumnAlgebra]].
+    * `queries` are (query_id, parsed, term offset): a batch shares one
+    * global term space. Every node adds its two operands in the order of
+    * the reference's fold, so counts and scores are bit-identical to
+    * evaluating the fold over per-term maps. Returns
+    * (query_id, doc_id, v) for every hit; None when no query can match. */
+  private def evalHits(perTerm: DataFrame, nTerms: Int,
+      queries: Seq[(Int, QueryParser.Parsed, Int)],
+      leaf: Int => Column = i => col(s"t$i"),
+      plus: (Column, Column) => Column = _ + _): Option[DataFrame] = {
+    val nodes = ArrayBuffer.empty[(String, Column)]
+    val results = queries.flatMap { case (qi, p, off) =>
+      p.eval(new ColumnAlgebra(i => leaf(i + off), plus, nodes))
+        .filterNot(_ eq Absent).map(qi -> _)
+    }
+    if (results.isEmpty) return None
+    val perDoc = perTerm.groupBy($"doc_id").agg(
+      max(when($"term_idx" === 0, $"v")).as("t0"),
+      (1 until nTerms).map(i =>
+        max(when($"term_idx" === i, $"v")).as(s"t$i")): _*)
+    val evaluated = nodes.foldLeft(perDoc) { case (df, (n, c)) =>
+      df.withColumn(n, c) }
+    // hits leave through a generator: a filter on a result column would be
+    // pushed down the node chain, inlining every node into the predicate —
+    // the exponential expression the chain exists to avoid
+    Some(evaluated
+      .select($"doc_id", explode(array(results.map { case (qi, v) =>
+        struct(lit(qi).as("query_id"), v.as("v")) }: _*)).as("h"))
+      .filter($"h.v".isNotNull)
+      .select($"h.query_id".as("query_id"), $"doc_id", $"h.v".as("v")))
+  }
+
+  /** (doc_id, v) hits of one query over its per-term frame. */
+  private def hitsOf(parsed: QueryParser.Parsed, perTerm: DataFrame)
+      : DataFrame =
+    evalHits(perTerm, parsed.searchWords.length, Seq((0, parsed, 0)))
+      .map(_.select($"doc_id", $"v"))
+      .getOrElse(emptyDf(
+        "doc_id" -> org.apache.spark.sql.types.LongType,
+        "v" -> org.apache.spark.sql.types.DoubleType))
+
+  /** Count hits → (conv_id, turn_idx, cnt) ranked like the reference's
+    * output with the deterministic tie-break. */
+  private def countResult(hits: DataFrame): DataFrame =
+    hits.join(docs, Seq("doc_id"))
+      .select($"conv_id", $"turn_idx", $"v".cast("long").as("cnt"))
+      .orderBy($"cnt".desc, $"conv_id", $"turn_idx")
 
   /** Batch count execution: N boolean queries answered in ONE index pass —
     * the dictionary scan prunes for the UNION of every query's words, the
-    * postings scan runs once under the combined coarse predicate, and the
-    * decoded per-term doc aggregate persists as a single shared frame that
-    * every query's boolean tree evaluates against (term indexes shifted per
-    * query). Postings decode — the expensive step — happens once per BATCH,
-    * not once per query: the workload shape of a scheduled analytics run
-    * over a 100-TB index, where job-launch and scan cost must amortize
-    * across the query set (the bench's qps phase measured 3-4 job launches
-    * as the single-query latency floor).
+    * postings scan and decode run once under the combined coarse
+    * predicate, and every query's boolean tree evaluates over the same
+    * per-doc pivot (term indexes shifted per query). Postings decode — the
+    * expensive step — happens once per BATCH, not once per query: the
+    * workload shape of a scheduled analytics run over a 100-TB index,
+    * where job-launch and scan cost must amortize across the query set
+    * (the bench's qps phase measured 3-4 job launches as the single-query
+    * latency floor).
     *
     * Output: (query_id, conv_id, turn_idx, cnt) — query_id is the input
     * position; a query that is invalid or has no hits contributes zero
     * rows (the reference's malformed-query tolerance, per query). */
   def searchCountBatch(queries: Seq[String]): DataFrame =
-    batchEval("cnt", queries, countAgg)
-      .map(_.reduce(_ unionByName _)
-        .join(docs, Seq("doc_id"))
+    batchHits(queries, countAgg)
+      .map(_.join(docs, Seq("doc_id"))
         .select($"query_id", $"conv_id", $"turn_idx",
           $"v".cast("long").as("cnt"))
         .orderBy($"query_id", $"cnt".desc, $"conv_id", $"turn_idx"))
       .getOrElse(emptyBatchResult("cnt"))
 
   /** The scoring sibling of [[searchCountBatch]]: N BM25 queries (any
-    * boolean shape) in ONE index pass — the shared per-term frame carries
-    * BM25 contributions, each query ranks its own top k from it. The
-    * DataFrame-algebra path throughout (the batch analog of
+    * boolean shape) in ONE index pass — the shared pivot carries BM25
+    * contributions, and each query ranks its own top k (score desc, doc
+    * id; tombstones masked before the rank) in one window over the batch.
+    * The DataFrame-algebra path throughout (the batch analog of
     * [[searchBm25Df]]): one shared decode beats per-query WAND early
     * termination when the queries ARRIVE as a batch, because the postings
     * read amortizes across the whole set. */
   def searchBm25Batch(queries: Seq[String], k: Int): DataFrame = {
     if (k < 1) return emptyBatchResult("score")
-    batchEval("bm25", queries, bm25Agg)
-      .map(_.map(f => maskHits(f)
-          .orderBy($"v".desc, $"doc_id").limit(k))
-        .reduce(_ unionByName _)
+    val rank = Window.partitionBy($"query_id").orderBy($"v".desc, $"doc_id")
+    batchHits(queries, bm25Agg)
+      .map(h => maskHits(h)
+        .withColumn("rank", row_number().over(rank))
+        .filter($"rank" <= k)
         .join(docs, Seq("doc_id"))
         .select($"query_id", $"conv_id", $"turn_idx", $"v".as("score"),
           $"doc_id")
@@ -318,53 +332,26 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       .getOrElse(emptyBatchResult("score"))
   }
 
-  /** The (doc_id, term_idx) pairs whose per-term values actually SURVIVE
-    * the query's boolean evaluation — the exact decomposition of
-    * [[DfAlgebra]]'s arithmetic: `or` keeps both sides' rows (their values
-    * sum), `and` keeps both sides' rows for docs present on BOTH sides,
-    * `not` erases the right side's docs entirely. A doc's score is
-    * precisely the sum of its retained pairs' values, so an explanation
-    * built on this set can never list a contribution the ranking
-    * discarded (e.g. a term NOT'd away in one branch while the doc is a
-    * hit through another). */
-  private def retainedTermPairs(parsed: QueryParser.Parsed,
-      perTerm: DataFrame): Option[DataFrame] = {
-    val alg = new ResultAlgebra[DataFrame] {
-      def empty: DataFrame = emptyDf(
-        "doc_id" -> org.apache.spark.sql.types.LongType,
-        "term_idx" -> org.apache.spark.sql.types.IntegerType)
-      def term(i: Int): DataFrame = perTerm.filter($"term_idx" === i)
-        .select($"doc_id", $"term_idx")
-      def or(a: DataFrame, x: DataFrame): DataFrame = a.unionByName(x)
-      def and(a: DataFrame, x: DataFrame): DataFrame =
-        a.join(x.select($"doc_id").distinct(), Seq("doc_id"), "left_semi")
-          .unionByName(
-            x.join(a.select($"doc_id").distinct(), Seq("doc_id"),
-              "left_semi"))
-      def not(a: DataFrame, x: DataFrame): DataFrame =
-        a.join(x.select($"doc_id").distinct(), Seq("doc_id"), "left_anti")
-    }
-    parsed.eval(alg)
-  }
-
   /** Score explanation (the Lucene `explain` / Elasticsearch `_explain`
     * posture): the per-matched-word BM25 breakdown of ONE document under a
     * query — (word, tf, df, idf, tfnorm, contribution), contribution =
     * idf·tfnorm, built from the SAME [[bm25Idf]]/[[bm25TfNorm]] blocks
     * every scoring path uses, so an explanation can never drift from the
     * ranking it explains. The boolean structure is honored exactly like
-    * the ranking honors it, via [[retainedTermPairs]]: a document OUTSIDE
-    * the query's hit set explains to empty (Lucene's match=false), a word
-    * whose value the evaluation discarded (NOT'd away — even when the doc
-    * is a hit through another OR branch) never appears, and a word
-    * matched by several surviving search terms folds its multiplicity
-    * into the contribution (it scored once per match), so the
-    * contributions ALWAYS sum to the doc's actual score. The plan is a
-    * normal query-shaped index read (letter-pruned dict scan + pushed
-    * postings predicates) narrowed to the one doc by a one-row broadcast
-    * join — never a full postings pass, and no driver job at call time
-    * (the method stays lazy like every other Searcher API). Unknown key,
-    * malformed query, or a non-hit doc → empty (the tolerance posture). */
+    * the ranking honors it: the doc's retained term indexes come from the
+    * same evaluator ([[evalHits]]) with term lists concatenated where
+    * values would add, so a document OUTSIDE the query's hit set explains
+    * to empty (Lucene's match=false), a word whose value the evaluation
+    * discarded (NOT'd away — even when the doc is a hit through another OR
+    * branch) never appears, and a word matched by several surviving
+    * search terms folds its multiplicity into the contribution (it scored
+    * once per match), so the contributions ALWAYS sum to the doc's actual
+    * score. The plan is a normal query-shaped index read (letter-pruned
+    * dict scan + pushed postings predicates) narrowed to the one doc by a
+    * one-row broadcast join — never a full postings pass, and no driver
+    * job at call time (the method stays lazy like every other Searcher
+    * API). Unknown key, malformed query, or a non-hit doc → empty (the
+    * tolerance posture). */
   def explainScore(query: String, convId: String, turnIdx: Int): DataFrame = {
     val empty = emptyDf(
       "word" -> org.apache.spark.sql.types.StringType,
@@ -375,26 +362,21 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       "contribution" -> org.apache.spark.sql.types.DoubleType)
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid || parsed.searchWords.isEmpty) return empty
-    // persist the matched-postings frame: the retention algebra reads it
-    // once per term leaf plus twice per AND/NOT node, and the word join
-    // reads it again — without the cache each read would re-scan
-    // dict+postings (the same economy every other query path gets from
-    // cacheSwap)
-    val mp = cacheSwap(s"explain:$query",
-      matchedPostings(matchedWords(parsed.searchWords),
-        coarsePred(parsed.searchWords)))
-    val retained = retainedTermPairs(parsed, countAgg(mp)) match {
-      case None => return empty
-      case Some(r) => r
-    }
+    val mp = matchedPostings(matchedWords(parsed.searchWords),
+      coarsePred(parsed.searchWords))
     // the doc key as a one-row broadcast; tombstone-masked docs are not
     // hits, so a deleted doc explains to empty like the ranking treats it
     val cursorId = docs
       .filter($"conv_id" === convId && $"turn_idx" === turnIdx)
       .select($"doc_id".as("a_id"))
-    val mine = retained
-      .join(broadcast(cursorId), $"doc_id" === $"a_id")
-      .select($"doc_id", $"term_idx")
+    val mine = evalHits(
+        countAgg(mp).join(broadcast(cursorId), $"doc_id" === $"a_id"),
+        parsed.searchWords.length, Seq((0, parsed, 0)),
+        leaf = i => when(col(s"t$i").isNotNull, array(lit(i))),
+        plus = concat(_, _)) match {
+      case None => return empty
+      case Some(h) => h.select($"doc_id", explode($"v").as("term_idx"))
+    }
     mp.join(broadcast(mine), Seq("term_idx", "doc_id"))
       .select($"word", $"tf".cast("double").as("tf"),
         $"df".cast("double").as("df"), $"dl")
@@ -419,33 +401,21 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   /** Shared batch scaffolding: parse every query, shift each query's term
     * indexes into one global space, build ONE per-term frame over the
     * union of all matched words (`perTermOf` maps the shared
-    * matched-postings frame to (term_idx, doc_id, v)), persist it, and
-    * evaluate each query's boolean tree against it. None ⇔ no query
-    * contributes anything. Each returned frame is
-    * (query_id, doc_id, v) for one input query. */
-  private def batchEval(kind: String, queries: Seq[String],
-      perTermOf: DataFrame => DataFrame): Option[Seq[DataFrame]] = {
-    if (queries.isEmpty) return None
+    * matched-postings frame to (term_idx, doc_id, v)), and evaluate every
+    * query over it. (query_id, doc_id, v); None ⇔ no query contributes
+    * anything. */
+  private def batchHits(queries: Seq[String],
+      perTermOf: DataFrame => DataFrame): Option[DataFrame] = {
     val parsedAll =
       queries.map(q => QueryParser.parse("(" + q + ")", conf.exactMatch))
     // global term index space: query qi's local term j ⇒ offsets(qi) + j
-    val offsets = parsedAll.scanLeft(0) { (acc, p) =>
-      acc + (if (p.valid) p.searchWords.length else 0) }
-    val allWords = parsedAll.filter(_.valid).flatMap(_.searchWords)
+    // (an invalid parse has no search words)
+    val offsets = parsedAll.scanLeft(0)(_ + _.searchWords.length)
+    val allWords = parsedAll.flatMap(_.searchWords)
     if (allWords.isEmpty) return None
-    val mp = matchedPostings(matchedWords(allWords), coarsePred(allWords))
-    val cached = cacheSwap(
-      s"batch:$kind:${queries.mkString("\u0001")}", perTermOf(mp))
-    val frames = parsedAll.zipWithIndex.flatMap { case (p, qi) =>
-      if (!p.valid || p.searchWords.isEmpty) None
-      else {
-        val off = offsets(qi)
-        val alg = new DfAlgebra(i => cached
-          .filter($"term_idx" === (i + off)).select($"doc_id", $"v"))
-        p.eval(alg).map(_.select(lit(qi).as("query_id"), $"doc_id", $"v"))
-      }
-    }
-    if (frames.isEmpty) None else Some(frames)
+    evalHits(perTermOf(matchedPostings(matchedWords(allWords),
+        coarsePred(allWords))), allWords.length,
+      parsedAll.zipWithIndex.map { case (p, qi) => (qi, p, offsets(qi)) })
   }
 
   /** Count-parity search: (conv_id, turn_idx, cnt) ranked like the
@@ -453,12 +423,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   def searchCount(query: String): DataFrame = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid) return emptyResult("cnt")
-    val mp = matchedPostings(matchedWords(parsed.searchWords),
-      coarsePred(parsed.searchWords))
-    val res = evalQuery(s"cnt:$query", query, countAgg(mp))
-    res.join(docs, Seq("doc_id"))
-      .select($"conv_id", $"turn_idx", $"v".cast("long").as("cnt"))
-      .orderBy($"cnt".desc, $"conv_id", $"turn_idx")
+    countResult(hitsOf(parsed, countAgg(matchedPostings(
+      matchedWords(parsed.searchWords), coarsePred(parsed.searchWords)))))
   }
 
   /** Shared BM25 building blocks — ONE definition each, so the scoring
@@ -490,7 +456,10 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     *
     * Pure-OR queries (the common top-k case) run distributed block-max WAND
     * over the compressed parts ([[Wand]]); boolean-structured queries fall
-    * back to the DataFrame algebra with BM25 contributions. */
+    * back to the DataFrame algebra with BM25 contributions. WAND scores
+    * each search word once, while the reference fold adds a word once per
+    * reference, so a query that names a word twice (`which OR which`) or
+    * never (an unquoted word under exactMatch) takes the algebra too. */
   def searchBm25(query: String, k: Int, useWand: Boolean = true): DataFrame = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid) return emptyResult("score")
@@ -498,9 +467,11 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       case QueryParser.OpItem(op) => op == QueryParser.OR
       case _ => true
     }
-    if (useWand && pureOr && parsed.searchWords.nonEmpty)
+    val refs = parsed.items.collect { case QueryParser.TermRef(i) => i }
+    if (useWand && pureOr && parsed.searchWords.nonEmpty &&
+        refs.sorted == parsed.searchWords.indices)
       return searchBm25Wand(parsed, k)
-    searchBm25Df(parsed, query, k)
+    searchBm25Df(parsed, k)
   }
 
   /** WAND path: matched words collapse to a (word, weight) frame with
@@ -528,8 +499,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   }
 
   /** The (term_idx, doc_id, v) BM25 per-term frame — ONE definition for
-    * every DataFrame-algebra scoring path ([[searchBm25Df]],
-    * [[searchBm25Where]], [[searchBm25WithPhrases]]), so the per-term
+    * the single-query DataFrame-algebra scoring paths ([[searchBm25Df]],
+    * [[searchBm25Page]], [[searchBm25Where]]), so the per-term
     * shape cannot drift between them (the same reason [[bm25Idf]]/
     * [[bm25TfNorm]] are centralized). */
   private def bm25PerTerm(searchWords: Seq[(String, Boolean)]): DataFrame =
@@ -549,10 +520,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     mp.withColumn("c", bm25Idf($"df") * bm25TfNorm($"tf"))
       .groupBy($"term_idx", $"doc_id").agg(sum($"c").as("v"))
 
-  private def searchBm25Df(parsed: QueryParser.Parsed, query: String,
-      k: Int): DataFrame =
-    rankTopK(evalQuery(s"bm25:$query", query,
-      bm25PerTerm(parsed.searchWords)), k)
+  private def searchBm25Df(parsed: QueryParser.Parsed, k: Int): DataFrame =
+    rankTopK(hitsOf(parsed, bm25PerTerm(parsed.searchWords)), k)
 
   /** Keyset pagination over the BM25 ranking (the Elasticsearch
     * `search_after` posture): page 1 with `after = None`, then each next
@@ -567,7 +536,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * from this query's own scored frame INSIDE the page's single action (a
     * broadcast-join chain, no driver collect — the method stays lazy like
     * every other Searcher API), so the walk is bit-stable by construction:
-    * the cursor comparison and the page read the same materialization, the
+    * the cursor comparison and the page read the same scoring plan, the
     * caller never round-trips a floating-point score, and pages cannot
     * shift even though the WAND top-k path may differ from the
     * DataFrame-algebra path by 1 ULP (the summation-order artifact this
@@ -579,11 +548,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       after: Option[(String, Int)] = None): DataFrame = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid || k < 1) return emptyResult("score")
-    // key shared with searchBm25Df: both build the identical bm25
-    // per-term frame, so page 2 of a walk (and a one-shot ranking that
-    // preceded it) reuses the page-1 materialization
-    val scored = evalQuery(s"bm25:$query", query,
-      bm25PerTerm(parsed.searchWords))
+    val scored = hitsOf(parsed, bm25PerTerm(parsed.searchWords))
     val pageBase = after match {
       case None => scored
       case Some((aConv, aTurn)) =>
@@ -798,8 +763,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     filteredKeys(meta, whereSql) match {
       case None => emptyResult("score")
       case Some(keys) =>
-        evalQuery(s"bm25:$query", query,
-          bm25PerTerm(parsed.searchWords))
+        hitsOf(parsed, bm25PerTerm(parsed.searchWords))
           .join(docs, Seq("doc_id"))
           .join(keys, Seq("conv_id", "turn_idx"))
           .orderBy($"v".desc, $"doc_id").limit(k)
@@ -913,13 +877,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     if (!parsed.valid) return emptyResult("cnt")
     val synMap = collectSynonyms(syn, parsed.searchWords.map(_._1))
     val (matched, coarse) = synMatched(parsed.searchWords, synMap)
-    val perTerm = matchedPostings(matched, coarse)
-      .groupBy($"term_idx", $"doc_id")
-      .agg(count(lit(1)).cast("double").as("v"))
-    val res = evalQuery(s"syncnt:$synMap:$query", query, perTerm)
-    res.join(docs, Seq("doc_id"))
-      .select($"conv_id", $"turn_idx", $"v".cast("long").as("cnt"))
-      .orderBy($"cnt".desc, $"conv_id", $"turn_idx")
+    countResult(hitsOf(parsed, countAgg(matchedPostings(matched, coarse))))
   }
 
   /** BM25 sibling of [[searchCountSynonyms]]: every matched word —
@@ -932,10 +890,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       return emptyResult("score")
     val synMap = collectSynonyms(syn, parsed.searchWords.map(_._1))
     val (matched, coarse) = synMatched(parsed.searchWords, synMap)
-    val perTerm = matchedPostings(matched, coarse)
-      .withColumn("c", bm25Idf($"df") * bm25TfNorm($"tf"))
-      .groupBy($"term_idx", $"doc_id").agg(sum($"c").as("v"))
-    rankTopK(evalQuery(s"synbm25:$synMap:$query", query, perTerm), k)
+    rankTopK(hitsOf(parsed, bm25Agg(matchedPostings(matched, coarse))), k)
   }
 
   // ---- related terms (query expansion, engine extension) --------------------
@@ -1268,84 +1223,11 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * reference's exact-term meaning untouched; single quotes have no
     * reference meaning to collide with (CharFold folds them to the
     * separator, so an unquoted apostrophe never reached term text anyway).
-    *
-    * Implementation: each quoted phrase is substituted with a reserved
-    * sentinel word before the reference parser runs, so the parse —
-    * validation quirks included — is EXACTLY [[QueryParser]]'s; the
-    * boolean evaluation then routes sentinel term indexes to the phrase
-    * pipeline ([[confirmCounts]]: index AND-prune + map-side kernel
-    * confirm) and everything else to the ordinary postings path. The
-    * sentinels never touch the dictionary scan (their lookup is masked),
-    * so a corpus word can never collide with one. */
+    * See [[extendedHits]] for the evaluation. */
   def searchCountWithPhrases(corpus: Dataset[Turn], query: String)
-      : DataFrame = {
-    val (rewritten, phraseOf, fuzzyOf, slopOf, boostOf) =
-      Searcher.rewriteExtended(query)
-    val parsed = QueryParser.parse("(" + rewritten + ")", conf.exactMatch)
-    if (!parsed.valid) return emptyResult("cnt")
-    // dict/postings lookup sees sentinels as unmatchable (empty) words;
-    // indexes stay aligned with parsed.searchWords
-    val lookupWords = parsed.searchWords.map { case (w, e) =>
-      if (phraseOf.contains(w) || fuzzyOf.contains(w) ||
-        slopOf.contains(w) || boostOf.contains(w)) ("", e) else (w, e) }
-    val mp = matchedPostings(matchedWords(lookupWords),
-      coarsePred(lookupWords))
-    val perTerm = mp.groupBy($"term_idx", $"doc_id")
-      .agg(count(lit(1)).cast("double").as("v"))
-    if (parsed.searchWords.isEmpty) return emptyResult("cnt")
-    val cached = cacheSwap(s"phrcnt:$query", perTerm)
-    // a standalone word's count frame (the boost branch cannot read the
-    // cached per-term frame — its inner word was masked from the lookup):
-    // same Q6 semantics as the main pipeline, one pruned scan
-    def plainCount(w: String, quoted: Boolean): DataFrame = {
-      val terms = Seq((w, quoted || conf.exactMatch))
-      matchedPostings(matchedWords(terms), coarsePred(terms))
-        .groupBy($"doc_id").agg(count(lit(1)).cast("double").as("v"))
-    }
-    def frameOf(w: String, fallback: => DataFrame): DataFrame =
-      phraseOf.get(w) match {
-        case Some(p) =>
-          confirmCounts(corpus, GraftPhraseCount.foldWords(p),
-              s"graft_phrase_count(text, '${
-                GraftPhraseCount.foldWords(p).mkString(" ")}')")
-            .map(_.select($"doc_id", $"cnt".cast("double").as("v")))
-            .getOrElse(new DfAlgebra(_ => null).empty)
-        case None => fuzzyOf.get(w) match {
-          case Some(fw) =>
-            // ~word virtual term: v = distinct 1-edit dictionary words
-            // present in the doc (searchFuzzy's counting semantics)
-            fuzzyMatched(fw, maxEdits = 1) match {
-              case None => new DfAlgebra(_ => null).empty
-              case Some((matched, coarse)) =>
-                matchedPostings(matched, coarse).groupBy($"doc_id")
-                  .agg(count(lit(1)).cast("double").as("v"))
-            }
-          case None => slopOf.get(w) match {
-            case Some((p, d)) =>
-              // 'a b'~d slop phrase: v = co-occurring position pairs
-              // within d (searchNear's counting semantics); >= 3 words
-              // count anchors (searchNearAll's semantics)
-              slopCounts(corpus, p, d)
-                .map(_.select($"doc_id", $"cnt".cast("double").as("v")))
-                .getOrElse(new DfAlgebra(_ => null).empty)
-            case None => boostOf.get(w) match {
-              case Some((iw, iq, _)) =>
-                // boosts affect SCORING only (the Lucene posture): the
-                // inner term — possibly itself a sentinel — counts
-                // exactly as if written unboosted
-                frameOf(iw, plainCount(iw, iq))
-              case None => fallback
-            }
-          }
-        }
-      }
-    val alg = new DfAlgebra(i => frameOf(parsed.searchWords(i)._1,
-      cached.filter($"term_idx" === i).select($"doc_id", $"v")))
-    val res = parsed.eval(alg).getOrElse(new DfAlgebra(_ => null).empty)
-    res.join(docs, Seq("doc_id"))
-      .select($"conv_id", $"turn_idx", $"v".cast("long").as("cnt"))
-      .orderBy($"cnt".desc, $"conv_id", $"turn_idx")
-  }
+      : DataFrame =
+    extendedHits(corpus, query, scoring = false).map(countResult)
+      .getOrElse(emptyResult("cnt"))
 
   /** BM25 over the phrase-extended boolean language — the scoring
     * sibling of [[searchCountWithPhrases]]: word terms contribute their
@@ -1358,75 +1240,74 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * consumer (df aggregate + score join — recompute-over-persist, the
     * operator-wide convention; the candidate frame is dup-bounded). */
   def searchBm25WithPhrases(corpus: Dataset[Turn], query: String,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    extendedHits(corpus, query, scoring = true).map(rankTopK(_, k))
+      .getOrElse(emptyResult("score"))
+
+  /** (doc_id, v) hits of the extended language, counts or BM25 scores.
+    * Each quoted phrase, slop phrase, `~word` fuzzy term and boost is
+    * substituted with a reserved sentinel word before the reference parser
+    * runs, so the parse — validation quirks included — is EXACTLY
+    * [[QueryParser]]'s. Sentinels are masked from the dictionary lookup (a
+    * corpus word can never collide with one); each contributes its own
+    * virtual-term frame under its term_idx instead, unioned into the plain
+    * words' per-term frame before the one evaluator ([[evalHits]]) runs.
+    * None when the query is invalid or has no search words. */
+  private def extendedHits(corpus: Dataset[Turn], query: String,
+      scoring: Boolean): Option[DataFrame] = {
     val (rewritten, phraseOf, fuzzyOf, slopOf, boostOf) =
       Searcher.rewriteExtended(query)
     val parsed = QueryParser.parse("(" + rewritten + ")", conf.exactMatch)
-    if (!parsed.valid || parsed.searchWords.isEmpty)
-      return emptyResult("score")
-    val lookupWords = parsed.searchWords.map { case (w, e) =>
-      if (phraseOf.contains(w) || fuzzyOf.contains(w) ||
-        slopOf.contains(w) || boostOf.contains(w)) ("", e) else (w, e) }
-    val mp = matchedPostings(matchedWords(lookupWords),
-      coarsePred(lookupWords))
-    val perTerm = mp.withColumn("c", bm25Idf($"df") * bm25TfNorm($"tf"))
-      .groupBy($"term_idx", $"doc_id").agg(sum($"c").as("v"))
-    val cached = cacheSwap(s"phrbm25:$query", perTerm)
-    // a standalone word's BM25 frame for the boost branch (its inner word
-    // is masked from the cached lookup) — same formula blocks as the main
-    // pipeline, so the scaled contribution cannot drift
-    def plainScore(w: String, quoted: Boolean): DataFrame = {
-      val terms = Seq((w, quoted || conf.exactMatch))
-      matchedPostings(matchedWords(terms), coarsePred(terms))
-        .withColumn("c", bm25Idf($"df") * bm25TfNorm($"tf"))
-        .groupBy($"doc_id").agg(sum($"c").as("v"))
-    }
-    def scoreOf(w: String, fallback: => DataFrame): DataFrame =
-      phraseOf.get(w) match {
-        case Some(p) =>
-          phraseCounts(corpus, p) match {
-            case None => new DfAlgebra(_ => null).empty
-            case Some(hits) =>
-              virtualTermScore(hits).select($"doc_id", $"v")
-          }
-        case None => fuzzyOf.get(w) match {
-          case Some(fw) =>
-            // ~word virtual term: the searchFuzzyBm25 contribution —
-            // each matched dictionary word scores idf·tfnorm, summed per
-            // doc (sum order = Spark's aggregation; the gate query keeps
-            // the neighborhood single-match so the oracle is bit-exact)
-            fuzzyMatched(fw, maxEdits = 1) match {
-              case None => new DfAlgebra(_ => null).empty
-              case Some((matched, coarse)) =>
-                matchedPostings(matched, coarse)
-                  .withColumn("c", bm25Idf($"df") * bm25TfNorm($"tf"))
-                  .groupBy($"doc_id").agg(sum($"c").as("v"))
-            }
-          case None => slopOf.get(w) match {
-            case Some((p, d)) =>
-              // 'a b'~d virtual term: ONE BM25 contribution with tf =
-              // near-pair count (anchor count for >= 3 words), df = near
-              // hit count (the phrase virtual-term formula)
-              slopCounts(corpus, p, d) match {
-                case None => new DfAlgebra(_ => null).empty
-                case Some(hits) =>
-                  virtualTermScore(hits).select($"doc_id", $"v")
-              }
-            case None => boostOf.get(w) match {
-              case Some((iw, iq, b)) =>
-                // term^N: the inner term's contribution — possibly itself
-                // a phrase/slop/fuzzy sentinel, re-dispatched — scaled by
-                // the boost (ONE IEEE multiply, so oracles stay bit-exact)
-                scoreOf(iw, plainScore(iw, iq))
-                  .select($"doc_id", ($"v" * lit(b)).as("v"))
-              case None => fallback
-            }
-          }
-        }
+    if (!parsed.valid || parsed.searchWords.isEmpty) return None
+    def sentinel(w: String): Boolean = phraseOf.contains(w) ||
+      fuzzyOf.contains(w) || slopOf.contains(w) || boostOf.contains(w)
+    val agg: DataFrame => DataFrame = if (scoring) bm25Agg else countAgg
+    def matchedFrame(matched: DataFrame, coarse: Option[Column]) =
+      agg(matchedPostings(matched, coarse)).select($"doc_id", $"v")
+    // a positional hit frame as ONE virtual term: v = its occurrence
+    // count, or its BM25 contribution (tf = count, df = hit count)
+    def positional(hits: Option[DataFrame]): Option[DataFrame] =
+      hits.map(h =>
+        if (scoring) virtualTermScore(h).select($"doc_id", $"v")
+        else h.select($"doc_id", $"cnt".cast("double").as("v")))
+    // a sentinel's (doc_id, v) frame; None when it can match nothing
+    def frameOf(w: String): Option[DataFrame] =
+      if (phraseOf.contains(w)) positional(phraseCounts(corpus, phraseOf(w)))
+      // 'a b'~d slop phrase: co-occurring position pairs within d
+      // (searchNear's counting); >= 3 words count anchors (searchNearAll's)
+      else if (slopOf.contains(w)) {
+        val (p, d) = slopOf(w)
+        positional(slopCounts(corpus, p, d))
       }
-    val alg = new DfAlgebra(i => scoreOf(parsed.searchWords(i)._1,
-      cached.filter($"term_idx" === i).select($"doc_id", $"v")))
-    rankTopK(parsed.eval(alg).getOrElse(new DfAlgebra(_ => null).empty), k)
+      // ~word: the distinct 1-edit dictionary words present in the doc
+      // (searchFuzzy's counting), or their summed term scores
+      // (searchFuzzyBm25's; the gate query keeps the neighborhood
+      // single-match so the oracle is bit-exact)
+      else if (fuzzyOf.contains(w))
+        fuzzyMatched(fuzzyOf(w), maxEdits = 1).map((matchedFrame _).tupled)
+      else boostOf.get(w).flatMap { case (iw, iq, b) =>
+        // term^N: the inner term — possibly itself a sentinel — exactly
+        // as if unboosted; a score scales by the boost (ONE IEEE
+        // multiply, so oracles stay bit-exact), a count does not (boosts
+        // affect scoring only, the Lucene posture)
+        val inner =
+          if (sentinel(iw)) frameOf(iw)
+          else {
+            val terms = Seq((iw, iq || conf.exactMatch))
+            Some(matchedFrame(matchedWords(terms), coarsePred(terms)))
+          }
+        if (scoring) inner.map(_.select($"doc_id", ($"v" * lit(b)).as("v")))
+        else inner
+      }
+    val lookupWords = parsed.searchWords.map { case (w, e) =>
+      if (sentinel(w)) ("", e) else (w, e) }
+    val perTerm = agg(matchedPostings(matchedWords(lookupWords),
+      coarsePred(lookupWords)))
+    val virtual = parsed.searchWords.zipWithIndex.flatMap { case ((w, _), i) =>
+      if (!sentinel(w)) None
+      else frameOf(w).map(_.select(lit(i).as("term_idx"), $"doc_id", $"v"))
+    }
+    Some(hitsOf(parsed, (perTerm +: virtual).reduce(_ unionByName _)))
   }
 
   /** BM25-scored phrase search: the phrase is scored as ONE virtual term
@@ -1434,12 +1315,13 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * (the classical positional-index phrase ranking), k1/b and the idf
     * form identical to [[searchBm25]]. df comes from a bounded aggregate
     * over the hit frame (one row) broadcast back over the hits — the
-    * corpus-scale tables are never re-read. */
+    * corpus-scale tables are never re-read. The hit frame evaluates per
+    * consumer (df aggregate + scoring — recompute-over-persist, like
+    * [[searchBm25WithPhrases]]). */
   def searchPhraseBm25(corpus: Dataset[Turn], phraseRaw: String,
       k: Int): DataFrame = phraseCounts(corpus, phraseRaw) match {
     case None => emptyResult("score")
-    case Some(raw) =>
-      val hits = cacheSwap(s"phrasebm25:$phraseRaw", raw) // df-agg + scoring both read it
+    case Some(hits) =>
       virtualTermScore(hits)
         .select($"conv_id", $"turn_idx", $"v".as("score"), $"doc_id")
         .orderBy($"score".desc, $"doc_id").limit(k).drop("doc_id")

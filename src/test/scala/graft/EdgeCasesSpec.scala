@@ -98,8 +98,8 @@ class EdgeCasesSpec extends SparkTestBase {
     val s = new Searcher(spark, new IndexStore(dir), conf)
     s.warm()
     assert(s.warmed)
-    // searchCount runs evalQuery, which drops the per-term cache — the
-    // warmed dict must SURVIVE (r3 review: close() there killed it)
+    // the warmed dict must SURVIVE a query (r3 review: a query path that
+    // released cached state through close() killed it)
     assert(s.searchCount("zebra").collect().nonEmpty)
     assert(s.warmed, "dict pin must survive a query")
     assert(s.searchBm25(""""zebra" AND wombat""", 5).collect().nonEmpty)

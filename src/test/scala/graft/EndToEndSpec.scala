@@ -29,7 +29,31 @@ class EndToEndSpec extends SparkTestBase {
 
   private lazy val searcher = new Searcher(spark, new IndexStore(indexDir), conf)
 
-  // reference query set (FIXTURES.md / tests/run_tests.sh:232-289)
+  /** 16 groups of three terms (48 term references over 32 distinct search
+    * words, wildcard and exact), nested two deep and chained by OR with
+    * every fourth link a NOT: a long boolean evaluation must stay linear
+    * in the query, not exponential. */
+  private val longChain = {
+    val ws = Seq("which", "would", "there", "people", "search", "index",
+      "spark", "query", "token", "merge", "shuffle", "partition",
+      "cluster", "executor", "transcript", "conversation")
+    val groups = ws.indices.map { i =>
+      val (a, b, c) =
+        (ws(i), "\"" + ws((i + 5) % 16) + "\"", ws((i + 11) % 16))
+      i % 3 match {
+        case 0 => s"(($a OR $b) AND $c)"
+        case 1 => s"($a OR ($b NOT $c))"
+        case _ => s"($a AND $b OR $c)"
+      }
+    }
+    groups.zipWithIndex.map { case (g, i) =>
+      if (i == 0) g else if (i % 4 == 3) s"NOT $g" else s"OR $g"
+    }.mkString(" ")
+  }
+
+  // reference query set (FIXTURES.md / tests/run_tests.sh:232-289), plus
+  // a long chain, a repeated term, and the skipped-OR quirk
+  // (Search.cpp:162-199: "x AND OR y" behaves like "x AND y")
   private val queries = Seq(
     "xyzzyqwkplm",
     "which", "would", "there",
@@ -39,7 +63,10 @@ class EndToEndSpec extends SparkTestBase {
     "(which NOT xyzzyqwk)",
     "((which OR would) AND there)",
     TranscriptGen.UniqueWord,
-    "\"" + TranscriptGen.UniqueWord + "\"")
+    "\"" + TranscriptGen.UniqueWord + "\"",
+    longChain,
+    "(which OR which)",
+    "(which AND OR would)")
 
   private def engineCounts(q: String): Map[DocKey, Long] =
     searcher.searchCount(q).collect().map {
@@ -62,6 +89,7 @@ class EndToEndSpec extends SparkTestBase {
   }
 
   test("count-parity on the reference query set") {
+    assert(oracle.searchCount(longChain).nonEmpty, longChain)
     for (q <- queries) {
       val expected = oracle.searchCount(q).toMap
       val got = engineCounts(q)

@@ -8,8 +8,9 @@ import graft.app.EntryQueries
 
 /** Round-6 optimization harness (guide §1.4): per-entry isolation of the
   * catalog queries OUTSIDE the frozen [[Bench]] main. Times each requested
-  * entry with the noop sink (computes every column of every row, no
-  * collect-side cost), optionally repeats, and optionally dumps
+  * entry with the count sink by default (the frozen bench's action; the
+  * noop sink computes every column of every row, no collect-side cost),
+  * optionally repeats, and optionally dumps
   * `.explain("formatted")` per entry. The session config mirrors
   * [[Bench.session]] exactly so numbers are comparable; results feed
   * OPTIMIZATION_r06.md, never the driver artifact.
@@ -17,7 +18,7 @@ import graft.app.EntryQueries
   * Usage: `sbt "runMain graft.BenchExtra [entry...]"` (no args = all).
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_REPEAT (default 1),
   * SPARK_GRAFT_EXPLAIN_DIR (write <entry>.txt plans instead of timing),
-  * SPARK_GRAFT_SINK=noop|count (count mirrors the frozen bench's action).
+  * SPARK_GRAFT_SINK=count|noop (default count).
   */
 object BenchExtra {
 

@@ -260,6 +260,17 @@ object EntryQueries {
     * driver-side harness collect independently of table size. */
   private val StreamUserCap = 100
 
+  /** A session for a micro-batch replay entry: the shared SparkContext
+    * with its own SQL conf, so the replay's shuffle width and AQE setting
+    * never reach queries the prefetch lanes plan on `s` meanwhile. */
+  private def replaySession(s: SparkSession, partitions: Int,
+      adaptive: Boolean = true): SparkSession = {
+    val rs = s.newSession()
+    rs.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    if (!adaptive) rs.conf.set("spark.sql.adaptive.enabled", "false")
+    rs
+  }
+
   // one long-lived Searcher per index (the REPL reuse pattern): parquet
   // listing/schema plans build once. Keyed by (dir, committed version) so a
   // snapshot committed at the same path after first use (merge/compact)
@@ -564,7 +575,12 @@ object EntryQueries {
       // O(table) (r2 verdict: full-table collect broke at 100x).
       import s.implicits._
       import graft.streaming.StreamingSessions
-      implicit val sqlCtx = s.sqlContext
+      // the state store commits one delta file per shuffle partition per
+      // micro-batch — for a 100-user harness slice, 4 state partitions cut
+      // the per-batch commit fan-out 8x (a production stream sizes this
+      // to its key volume, not a constant)
+      val rs = replaySession(s, partitions = 4)
+      implicit val sqlCtx = rs.sqlContext
       val all = t(s, d, "events")
         .filter(col("user_id") < StreamUserCap)
         .select(col("user_id").cast("long"), col("ts"))
@@ -573,26 +589,18 @@ object EntryQueries {
       val source = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[StreamingSessions.UserEvent]
       val name = s"sess_stream_${System.identityHashCode(source)}"
-      // the state store commits one delta file per shuffle partition per
-      // micro-batch — for a 100-user harness slice, 4 state partitions
-      // (captured at query START; restored right after) cut the per-batch
-      // commit fan-out 8x without touching the rest of the catalog (a
-      // production stream sizes this to its key volume, not a constant)
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val q = StreamingSessions.sessionCounts(
+          source.toDS().withWatermark("ts", "10 minutes"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("update").start()
       try {
-        val q = StreamingSessions.sessionCounts(
-            source.toDS().withWatermark("ts", "10 minutes"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").start()
-        try {
-          all.grouped(math.max(1, (all.length + 1) / 2)).foreach { chunk =>
-            source.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      s.table(name)
+        all.grouped(math.max(1, (all.length + 1) / 2)).foreach { chunk =>
+          source.addData(chunk.toSeq)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      // the memory sink's view lives in the session that ran the query
+      rs.table(name)
         .groupBy($"user_id")
         .agg(max(struct($"n_events", $"n_sessions")).as("s"))
         .select($"user_id", $"s.n_events".as("n_events"),
@@ -610,7 +618,15 @@ object EntryQueries {
       // (production input is readStream on the documents source); the id
       // cap bounds the collect like StreamUserCap above.
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
+      // 8 shuffle partitions and AQE off for the replay: each micro-batch's
+      // joins/dedups and parquet appends over a 300-row harness slice
+      // otherwise fan out to 32 near-empty tasks and files per batch, and
+      // each foreachBatch exchange materializes as its own stage job (~12
+      // jobs per 100-row micro-batch measured); AQE's runtime re-planning
+      // buys nothing at micro-batch size — production streams over real
+      // batch volumes keep it on
+      val rs = replaySession(s, partitions = 8, adaptive = false)
+      implicit val sqlCtx = rs.sqlContext
       val all = t(s, d, "documents").filter(col("doc_id") < 300)
         .select(col("doc_id").cast("long"), col("text"))
         .orderBy(col("doc_id")).as[(Long, String)].collect()
@@ -620,32 +636,15 @@ object EntryQueries {
       // checkpoint lives UNDER root so the single recursive delete below
       // cleans every run artifact (repeated gate runs were accumulating
       // unbounded /tmp state)
-      // 8 shuffle partitions for the replay (the q_events_sessions_stream
-      // convention, restored after): each micro-batch's joins/dedups and
-      // parquet appends over a 300-row harness slice otherwise fan out to
-      // 32 near-empty tasks and files per batch. AQE is off for the same
-      // replay window: each foreachBatch exchange otherwise materializes
-      // as its own stage job (~12 jobs per 100-row micro-batch measured),
-      // and AQE's runtime re-planning buys nothing at micro-batch size —
-      // production streams over real batch volumes keep it on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val q = graft.streaming.StreamingDedup.start(rs,
+        source.toDF().toDF("doc_id", "text"), root, s"$root/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       try {
-        val q = graft.streaming.StreamingDedup.start(s,
-          source.toDF().toDF("doc_id", "text"), root, s"$root/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        try {
-          all.grouped(math.max(1, (all.length + 2) / 3)).foreach { chunk =>
-            source.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevSp)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
+        all.grouped(math.max(1, (all.length + 2) / 3)).foreach { chunk =>
+          source.addData(chunk.toSeq)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
       // materialize the bounded verdict slice BEFORE deleting the state
       // dirs (the returned frame outlives this function)
       val rows = s.read.parquet(s"$root/verdicts")
@@ -666,7 +665,9 @@ object EntryQueries {
     // restriction contracts are PipelineSpec/StreamingSpec's job
     "q_sim_semdedup_stream" -> ((s, d) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
+      // the q_dedup_stream replay conf, same micro-batch-size rationale
+      val rs = replaySession(s, partitions = 8, adaptive = false)
+      implicit val sqlCtx = rs.sqlContext
       val emb = t(s, d, "embeddings").filter(col("vec_id") < 300)
       val cents = Similarity.fitCentroids(emb, nLists = 4)
       val all = emb.select(col("vec_id").cast("long"), col("embedding"))
@@ -674,27 +675,16 @@ object EntryQueries {
       val source = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Seq[Float])]
       val root = tmpFixtureDir("graft-qsemstream")
-      // 8 shuffle partitions + AQE off for the replay (the q_dedup_stream
-      // convention, restored after) — same micro-batch-size rationale
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val q = graft.streaming.StreamingDedup.startSemantic(rs,
+        source.toDF().toDF("vec_id", "embedding"), root, s"$root/ckpt",
+        cents, minCos = 0.42,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       try {
-        val q = graft.streaming.StreamingDedup.startSemantic(s,
-          source.toDF().toDF("vec_id", "embedding"), root, s"$root/ckpt",
-          cents, minCos = 0.42,
-          trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        try {
-          all.grouped(math.max(1, (all.length + 2) / 3)).foreach { chunk =>
-            source.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevSp)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
+        all.grouped(math.max(1, (all.length + 2) / 3)).foreach { chunk =>
+          source.addData(chunk.toSeq)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
       val rows = s.read.parquet(s"$root/verdicts")
         .dropDuplicates("batch_id", "vec_id")
         .select(col("vec_id"), col("is_new"))
@@ -1487,9 +1477,6 @@ object EntryQueries {
         .orderBy(col("doc_id"))
     }),
 
-    // BM25 over the slop-extended boolean language: the slop term is ONE
-    // virtual BM25 term (tf = near-pair count, df = near hit count) and
-    // composes with the word's term score under AND
     // query-time synonym expansion (the Solr synonym-filter posture):
     // "customer" also matches its synonyms stream/vector as exact terms —
     // cnt per doc = distinct matched words of the group + the AND'd term
@@ -1540,6 +1527,9 @@ object EntryQueries {
         .orderBy(col("doc_id"))
     }),
 
+    // BM25 over the slop-extended boolean language: the slop term is ONE
+    // virtual BM25 term (tf = near-pair count, df = near hit count) and
+    // composes with the word's term score under AND
     "q_fts_slop_bm25_bool" -> ((s, d) => {
       val res = searcher(s, indexDirFull(s, d))
         .searchBm25WithPhrases(docsCorpus(s, d),

@@ -34,6 +34,7 @@ object Compactor {
     val store = new IndexStore(root)
     val oldV = store.currentVersion.getOrElse(
       throw new IllegalStateException(s"no snapshot to compact at $root"))
+    val oldMeta = store.meta(oldV)
     val v = store.nextVersion
     val dir = store.snapshotDir(v)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -43,7 +44,7 @@ object Compactor {
     // scale-adaptive shuffle width (the IndexBuilder pEff rationale):
     // compaction is Θ(index), so size the shuffles to the index being
     // squashed — oldMeta.numDocs is already on the driver, no extra job
-    val pEff = math.min(P, math.max(1, (store.meta(oldV).numDocs / 2000L).toInt))
+    val pEff = math.min(P, math.max(1, (oldMeta.numDocs / 2000L).toInt))
 
     def stage(name: String)(f: => Unit): Unit =
       store.instrumentedStage(spark, v, name, done) { f; -1L }
@@ -169,7 +170,7 @@ object Compactor {
           .join(fixedIds, Seq("doc_id"), "left_anti")
         val tokens = decoded.unionByName(fresh)
           .select($"term", $"doc_id", $"tf", $"dl")
-        val span = store.meta(oldV).maxDocId + 1
+        val span = oldMeta.maxDocId + 1
         val hot: Map[String, Int] = tokens.groupBy($"term")
           .agg(count(lit(1)).as("df"))
           .filter($"df" > conf.maxPostingsPerPart)
@@ -196,13 +197,12 @@ object Compactor {
     store.writeLayers(v, Seq(TableLayer(v, s"v$v/docs", s"v$v/doc_stats",
       s"v$v/postings", s"v$v/dict", None)))
     val stats = store.docStatsAt(spark, v)
-    // Option aggregates (the IndexBuilder meta convention): a snapshot
+    // Option aggregate (the IndexBuilder meta convention): a snapshot
     // whose docs were ALL tombstoned compacts to a valid empty index
-    val (numDocs, totalTokensOpt, maxIdOpt) = stats
-      .agg(count(lit(1)), sum($"dl"), max($"doc_id"))
-      .as[(Long, Option[Long], Option[Long])].head()
-    val (totalTokens, maxId) =
-      (totalTokensOpt.getOrElse(0L), maxIdOpt.getOrElse(-1L))
+    val (numDocs, totalTokensOpt) = stats
+      .agg(count(lit(1)), sum($"dl"))
+      .as[(Long, Option[Long])].head()
+    val totalTokens = totalTokensOpt.getOrElse(0L)
     // compaction writes a fresh single-layer dict with one row per term —
     // numTerms is its parquet footer row count (same invariant the
     // builder's meta stage relies on), not a distinct shuffle
@@ -210,9 +210,12 @@ object Compactor {
       if (IndexStore.dirHasParquet(s"${store.snapshotDir(v)}/dict"))
         spark.read.parquet(s"${store.snapshotDir(v)}/dict").count()
       else 0L
-    val meta = IndexMeta(v, numDocs, maxId, totalTokens,
+    // ids are never reused: maxDocId stays, and the purge is counted
+    // (numDocs before compaction still includes the tombstoned docs)
+    val meta = IndexMeta(v, numDocs, oldMeta.maxDocId, totalTokens,
       if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs,
-      numTerms, conf.k1, conf.b, conf.blockSize)
+      numTerms, conf.k1, conf.b, conf.blockSize,
+      oldMeta.purgedDocs + oldMeta.numDocs - numDocs)
     store.writeMeta(v, meta)
     store.recordStage(v, "meta", numDocs, 0L,
       Map("compactedFrom" -> s"v$oldV", "fix" -> fix.nonEmpty,

@@ -359,7 +359,7 @@ object IndexMerger {
     val numTerms = oldMeta.numTerms + newTerms
     val meta = IndexMeta(v, numDocs, maxId, totalTokens,
       if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs,
-      numTerms, conf.k1, conf.b, conf.blockSize)
+      numTerms, conf.k1, conf.b, conf.blockSize, oldMeta.purgedDocs)
     store.writeMeta(v, meta)
     store.recordStage(v, "meta", numDocs, 0L,
       Map("mergedInto" -> s"v$oldV", "numTerms" -> numTerms))

@@ -9,7 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.util.Jsonl
 
-/** Snapshot metadata persisted in `meta.json`. */
+/** Snapshot metadata persisted in `meta.json`. Doc ids are never reused:
+  * `maxDocId` is the highest id ever assigned, and `purgedDocs` counts the
+  * ids compaction has purged since, so the docs table holds exactly
+  * `maxDocId + 1 - purgedDocs` rows. */
 final case class IndexMeta(
     version: Int,
     numDocs: Long,
@@ -19,19 +22,23 @@ final case class IndexMeta(
     numTerms: Long,
     k1: Double,
     b: Double,
-    blockSize: Int) {
+    blockSize: Int,
+    purgedDocs: Long = 0L) {
   def toJson: String = Jsonl.write(Map(
     "version" -> version, "numDocs" -> numDocs, "maxDocId" -> maxDocId,
     "totalTokens" -> totalTokens, "avgdl" -> avgdl, "numTerms" -> numTerms,
-    "k1" -> k1, "b" -> b, "blockSize" -> blockSize))
+    "k1" -> k1, "b" -> b, "blockSize" -> blockSize,
+    "purgedDocs" -> purgedDocs))
 }
 
 object IndexMeta {
+  /** A snapshot written before `purgedDocs` was recorded reads it as 0. */
   def fromJson(s: String): IndexMeta = {
     val m = Jsonl.parse(s)
     IndexMeta(m("version").toInt, m("numDocs").toLong, m("maxDocId").toLong,
       m("totalTokens").toLong, m("avgdl").toDouble, m("numTerms").toLong,
-      m("k1").toDouble, m("b").toDouble, m("blockSize").toInt)
+      m("k1").toDouble, m("b").toDouble, m("blockSize").toInt,
+      m.get("purgedDocs").fold(0L)(_.toLong))
   }
 }
 

@@ -5,11 +5,13 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
+  LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.index.{Codec, IndexMeta, IndexStore}
 import graft.model.{EngineConf, Turn}
-import graft.tokenize.GraftPhraseCount
+import graft.tokenize.{CharFold, GraftPhraseCount}
 
 /** Query execution over the index tables.
   *
@@ -154,33 +156,47 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     else Some(letterC && $"term".startsWith(term))
   }
 
-  /** (term_idx, word, df) for every matched dictionary word of every search
-    * word — a single pruned scan of dict for all terms (the reference's
-    * shared dictionary scan, app/Index/Index_Search.cpp:99-104). */
-  def matchedWords(searchWords: Seq[(String, Boolean)]): DataFrame = {
-    // a dictionary word can match several search words (shared prefixes) —
-    // one pruned dict scan per search word, unioned; Catalyst merges the
-    // scans and each branch keeps its partition filter + pushed predicate
-    val branches = searchWords.zipWithIndex.flatMap { case ((t, e), i) =>
-      matchCond(t, e).map(c => dict.filter(c)
-        .select(lit(i).as("term_idx"), $"term".as("word"), $"df"))
+  /** (term_idx, dictionary predicate) for every search word, in order —
+    * the one condition list [[matchedWords]], [[coarsePred]] and the
+    * synonym path build from. Each synonym of a word joins as an EXACT
+    * condition under the word's term_idx. */
+  private def matchConds(searchWords: Seq[(String, Boolean)],
+      synMap: Map[String, Seq[String]] = Map.empty): Seq[(Int, Column)] =
+    searchWords.zipWithIndex.flatMap { case ((t, e), i) =>
+      (matchCond(t, e).toSeq ++
+        synMap.getOrElse(t, Nil).flatMap(matchCond(_, isExact = true)))
+        .map(i -> _)
     }
-    if (branches.isEmpty)
+
+  /** (term_idx, word, df) for every matched dictionary word of every
+    * condition — a single pruned scan of dict for all terms (the
+    * reference's shared dictionary scan, app/Index/Index_Search.cpp:99-104).
+    * A dictionary word can match several search words (shared prefixes):
+    * one pruned dict scan per condition, unioned; Catalyst merges the
+    * scans and each branch keeps its partition filter + pushed predicate. */
+  private def matchedOf(conds: Seq[(Int, Column)]): DataFrame =
+    if (conds.isEmpty)
       spark.emptyDataFrame
         .select(lit(0).as("term_idx"), lit("").as("word"), lit(0L).as("df"))
         .limit(0)
-    else branches.reduce(_ unionByName _)
-  }
+    else conds.map { case (i, c) => dict.filter(c)
+        .select(lit(i).as("term_idx"), $"term".as("word"), $"df") }
+      .reduce(_ unionByName _)
 
-  /** Coarse postings-scan predicate derived from the query words alone —
-    * letter equality (partition pruning) plus the pushable equals /
-    * startsWith per word (parquet min/max file skipping). None when no
-    * word can match. */
+  /** Coarse postings-scan predicate from the conditions alone — letter
+    * equality (partition pruning) plus the pushable equals / startsWith
+    * per word (parquet min/max file skipping). None when no word can
+    * match. */
+  private def coarseOf(conds: Seq[(Int, Column)]): Option[Column] =
+    if (conds.isEmpty) None else Some(conds.map(_._2).reduce(_ || _))
+
+  /** [[matchedOf]] over the search words' conditions. */
+  def matchedWords(searchWords: Seq[(String, Boolean)]): DataFrame =
+    matchedOf(matchConds(searchWords))
+
   private def coarsePred(searchWords: Seq[(String, Boolean)])
-      : Option[Column] = {
-    val cs = searchWords.flatMap { case (t, e) => matchCond(t, e) }
-    if (cs.isEmpty) None else Some(cs.reduce(_ || _))
-  }
+      : Option[Column] =
+    coarseOf(matchConds(searchWords))
 
   /** Exploded postings of all matched words:
     * (term_idx, word, df, doc_id, tf, dl). `coarse` pre-prunes the
@@ -196,12 +212,10 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       .select($"term_idx", $"word", $"df", expr("graft_postings(bytes)"))
   }
 
-  private def emptyDf(fields: (String, org.apache.spark.sql.types.DataType)*)
-      : DataFrame =
+  private def emptyDf(fields: (String, DataType)*): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
-        org.apache.spark.sql.types.StructField(n, t) }))
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
 
   /** The boolean evaluator's algebra over nullable per-doc columns, NULL
     * meaning "doc absent": `or` keeps either side and adds where both are
@@ -276,9 +290,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       : DataFrame =
     evalHits(perTerm, parsed.searchWords.length, Seq((0, parsed, 0)))
       .map(_.select($"doc_id", $"v"))
-      .getOrElse(emptyDf(
-        "doc_id" -> org.apache.spark.sql.types.LongType,
-        "v" -> org.apache.spark.sql.types.DoubleType))
+      .getOrElse(emptyDf("doc_id" -> LongType, "v" -> DoubleType))
 
   /** Count hits → (conv_id, turn_idx, cnt) ranked like the reference's
     * output with the deterministic tie-break. */
@@ -353,13 +365,9 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * API). Unknown key, malformed query, or a non-hit doc → empty (the
     * tolerance posture). */
   def explainScore(query: String, convId: String, turnIdx: Int): DataFrame = {
-    val empty = emptyDf(
-      "word" -> org.apache.spark.sql.types.StringType,
-      "tf" -> org.apache.spark.sql.types.DoubleType,
-      "df" -> org.apache.spark.sql.types.DoubleType,
-      "idf" -> org.apache.spark.sql.types.DoubleType,
-      "tfnorm" -> org.apache.spark.sql.types.DoubleType,
-      "contribution" -> org.apache.spark.sql.types.DoubleType)
+    val empty = emptyDf("word" -> StringType, "tf" -> DoubleType,
+      "df" -> DoubleType, "idf" -> DoubleType, "tfnorm" -> DoubleType,
+      "contribution" -> DoubleType)
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid || parsed.searchWords.isEmpty) return empty
     val mp = matchedPostings(matchedWords(parsed.searchWords),
@@ -391,12 +399,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       .orderBy($"word")
   }
 
-  private def emptyBatchResult(valCol: String): DataFrame = emptyDf(
-    "query_id" -> org.apache.spark.sql.types.IntegerType,
-    "conv_id" -> org.apache.spark.sql.types.StringType,
-    "turn_idx" -> org.apache.spark.sql.types.IntegerType,
-    valCol -> (if (valCol == "cnt") org.apache.spark.sql.types.LongType
-               else org.apache.spark.sql.types.DoubleType))
+  private def emptyBatchResult(valCol: String): DataFrame =
+    emptyDf(("query_id" -> IntegerType) +: resultFields(valCol): _*)
 
   /** Shared batch scaffolding: parse every query, shift each query's term
     * indexes into one global space, build ONE per-term frame over the
@@ -489,11 +493,22 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     // exact matched-word set with its weight
     val coarse = coarsePred(parsed.searchWords)
     if (coarse.isEmpty) return emptyResult("score")
-    val top = Wand.topK(spark, postings.filter(coarse.get), words,
-      meta.maxDocId + 1, meta.avgdl, conf, k, exclude = deletedArr)
+    wandTopK(postings.filter(coarse.get), words, k)
+  }
+
+  /** Block-max WAND top-k over the `scanned` postings for the (word,
+    * weight) frame `words`, keys resolved against the docs table and
+    * ranked (score desc, doc id). `drop` removes matching docs after WAND:
+    * WAND then ranks k + 1, since the one dropped doc (a seed) may hold
+    * a slot. */
+  private def wandTopK(scanned: DataFrame, words: DataFrame, k: Int,
+      drop: Option[Column] = None): DataFrame = {
+    val top = Wand.topK(spark, scanned, words, meta.maxDocId + 1,
+      meta.avgdl, conf, if (drop.isEmpty) k else k + 1, exclude = deletedArr)
     // the top-k side is k rows — broadcast it so resolving doc keys is a
     // map-side lookup over the docs scan, not a sort-merge join
-    broadcast(top).join(docs, Seq("doc_id"))
+    val resolved = broadcast(top).join(docs, Seq("doc_id"))
+    drop.fold(resolved)(d => resolved.filter(!d))
       .select($"conv_id", $"turn_idx", $"score", $"doc_id")
       .orderBy($"score".desc, $"doc_id").limit(k).drop("doc_id")
   }
@@ -575,11 +590,14 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     rankTopK(pageBase, k)
   }
 
-  private def emptyResult(valCol: String): DataFrame = emptyDf(
-    "conv_id" -> org.apache.spark.sql.types.StringType,
-    "turn_idx" -> org.apache.spark.sql.types.IntegerType,
-    valCol -> (if (valCol == "cnt") org.apache.spark.sql.types.LongType
-               else org.apache.spark.sql.types.DoubleType))
+  /** (conv_id, turn_idx, cnt: long | score: double) — the ranked result
+    * schema. */
+  private def resultFields(valCol: String): Seq[(String, DataType)] =
+    Seq("conv_id" -> StringType, "turn_idx" -> IntegerType,
+      valCol -> (if (valCol == "cnt") LongType else DoubleType))
+
+  private def emptyResult(valCol: String): DataFrame =
+    emptyDf(resultFields(valCol): _*)
 
   // ---- phrase search (engine extension) ----------------------------------
 
@@ -644,13 +662,11 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       : Option[DataFrame] = {
     val words = GraftPhraseCount.foldWords(wordsRaw)
     val distinct = words.distinct
-    if (words.length == 2) nearCounts(corpus, wordsRaw, d)
-    else if (distinct.length == 1 && words.length >= 2)
-      // all-duplicate phrase: the same-word pair semantics of 'a a'~d
-      nearCounts(corpus, distinct.head + " " + distinct.head, d)
-    else if (distinct.length == 2)
-      nearCounts(corpus, distinct.mkString(" "), d)
-    else nearAllCounts(corpus, wordsRaw, d)
+    // an all-duplicate phrase keeps the same-word pair semantics of 'a a'~d
+    if (words.length >= 2 && distinct.length <= 2) {
+      val pair = if (distinct.length == 1) words.take(2) else distinct
+      nearCounts(corpus, pair.mkString(" "), d)
+    } else nearAllCounts(corpus, wordsRaw, d)
   }
 
   /** ONE BM25 virtual-term contribution over a positional hit frame
@@ -789,10 +805,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * into at most |distinct facets| groups, then k rows move. */
   def searchFacets(meta: DataFrame, query: String, facetCol: String,
       k: Int = 20): DataFrame = {
-    val empty = emptyDf(
-      "facet" -> org.apache.spark.sql.types.StringType,
-      "n_docs" -> org.apache.spark.sql.types.LongType,
-      "total_cnt" -> org.apache.spark.sql.types.LongType)
+    val empty = emptyDf("facet" -> StringType, "n_docs" -> LongType,
+      "total_cnt" -> LongType)
     if (k < 1) return empty
     val proj =
       try {
@@ -836,36 +850,22 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     }
   }
 
-  /** Matched dictionary words of every search word WITH synonym
-    * expansion: the word keeps its own semantics (wildcard/exact, quirks
-    * included) and each synonym joins as an EXACT dictionary term under
-    * the same term_idx; duplicates collapse (a synonym also caught by
-    * the word's prefix counts once — the Q6 distinct-matched-words
-    * invariant). Returns (matched frame, coarse postings predicate) —
-    * letter pruning and pushed predicates survive expansion because
+  /** Matched postings of every search word WITH synonym expansion: the
+    * word keeps its own semantics (wildcard/exact, quirks included) and
+    * each synonym joins as an EXACT dictionary term under the same
+    * term_idx; duplicates collapse (a synonym also caught by the word's
+    * prefix counts once — the Q6 distinct-matched-words invariant).
+    * Letter pruning and pushed predicates survive expansion because
     * synonyms are exact equality conditions. A word the dictionary
     * lookup rejects (the min-length quirk) can still match through its
     * synonyms — expansion rescues it, the standard synonym-filter
     * behavior. */
-  private def synMatched(searchWords: Seq[(String, Boolean)],
-      synMap: Map[String, Seq[String]]): (DataFrame, Option[Column]) = {
-    val conds = searchWords.zipWithIndex.flatMap { case ((t, e), i) =>
-      (matchCond(t, e).toSeq ++
-        synMap.getOrElse(t, Nil).flatMap(s => matchCond(s, isExact = true)))
-        .map(c => (i, c))
-    }
-    val branches = conds.map { case (i, c) => dict.filter(c)
-      .select(lit(i).as("term_idx"), $"term".as("word"), $"df") }
-    val matched =
-      if (branches.isEmpty)
-        spark.emptyDataFrame
-          .select(lit(0).as("term_idx"), lit("").as("word"), lit(0L).as("df"))
-          .limit(0)
-      else branches.reduce(_ unionByName _)
-        .dropDuplicates("term_idx", "word")
-    val coarse =
-      if (conds.isEmpty) None else Some(conds.map(_._2).reduce(_ || _))
-    (matched, coarse)
+  private def synPostings(syn: DataFrame, parsed: QueryParser.Parsed)
+      : DataFrame = {
+    val conds = matchConds(parsed.searchWords,
+      collectSynonyms(syn, parsed.searchWords.map(_._1)))
+    matchedPostings(matchedOf(conds).dropDuplicates("term_idx", "word"),
+      coarseOf(conds))
   }
 
   /** Count-parity search with query-time synonym expansion: each query
@@ -875,9 +875,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   def searchCountSynonyms(syn: DataFrame, query: String): DataFrame = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid) return emptyResult("cnt")
-    val synMap = collectSynonyms(syn, parsed.searchWords.map(_._1))
-    val (matched, coarse) = synMatched(parsed.searchWords, synMap)
-    countResult(hitsOf(parsed, countAgg(matchedPostings(matched, coarse))))
+    countResult(hitsOf(parsed, countAgg(synPostings(syn, parsed))))
   }
 
   /** BM25 sibling of [[searchCountSynonyms]]: every matched word —
@@ -888,9 +886,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid || parsed.searchWords.isEmpty)
       return emptyResult("score")
-    val synMap = collectSynonyms(syn, parsed.searchWords.map(_._1))
-    val (matched, coarse) = synMatched(parsed.searchWords, synMap)
-    rankTopK(hitsOf(parsed, bm25Agg(matchedPostings(matched, coarse))), k)
+    rankTopK(hitsOf(parsed, bm25Agg(synPostings(syn, parsed))), k)
   }
 
   // ---- related terms (query expansion, engine extension) --------------------
@@ -911,10 +907,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * infeasible seed returns empty. */
   def relatedTerms(corpus: Dataset[Turn], word: String, k: Int = 10,
       minCoDf: Int = 2): DataFrame = {
-    val empty = emptyDf(
-      "term" -> org.apache.spark.sql.types.StringType,
-      "co_df" -> org.apache.spark.sql.types.LongType,
-      "pmi" -> org.apache.spark.sql.types.DoubleType)
+    val empty = emptyDf("term" -> StringType, "co_df" -> LongType,
+      "pmi" -> DoubleType)
     val folded = GraftPhraseCount.foldWords(word)
     if (folded.length != 1) return empty
     val w = folded.head
@@ -964,11 +958,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * re-tokenized. */
   def searchSnippets(corpus: Dataset[Turn], query: String, width: Int = 5,
       k: Int = 10): DataFrame = {
-    val empty = emptyDf(
-      "conv_id" -> org.apache.spark.sql.types.StringType,
-      "turn_idx" -> org.apache.spark.sql.types.IntegerType,
-      "cnt" -> org.apache.spark.sql.types.LongType,
-      "snippet" -> org.apache.spark.sql.types.StringType)
+    val empty = emptyDf("conv_id" -> StringType, "turn_idx" -> IntegerType,
+      "cnt" -> LongType, "snippet" -> StringType)
     if (width < 0 || k < 1) return empty
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid) return empty
@@ -1035,14 +1026,10 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       chosen.map { case (t, _, w) => (t, w) }).toDF("word", "weight")
     val coarse = $"letter".isin(chosen.map(_._1.substring(0, 1)).distinct: _*) &&
       $"term".isin(chosen.map(_._1): _*)
-    // k+1 from WAND: the seed is a perfect self-match and may occupy one
-    // slot; dropping it afterwards still leaves the true non-seed top-k
-    val top = Wand.topK(spark, postings.filter(coarse), words,
-      meta.maxDocId + 1, meta.avgdl, conf, k + 1, exclude = deletedArr)
-    broadcast(top).join(docs, Seq("doc_id"))
-      .filter(!($"conv_id" === convId && $"turn_idx" === turnIdx))
-      .select($"conv_id", $"turn_idx", $"score", $"doc_id")
-      .orderBy($"score".desc, $"doc_id").limit(k).drop("doc_id")
+    // the seed is a perfect self-match and may occupy one WAND slot;
+    // dropping it afterwards still leaves the true non-seed top-k
+    wandTopK(postings.filter(coarse), words, k,
+      drop = Some($"conv_id" === convId && $"turn_idx" === turnIdx))
   }
 
   /** Conversation-level rollup of [[searchCount]] (transcript analytics:
@@ -1145,9 +1132,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   def suggest(prefix: String, k: Int = 10): DataFrame = {
     if (prefix == null || prefix.isEmpty || k < 1 ||
         prefix.exists(c => c < 'a' || c > 'z'))
-      return emptyDf(
-        "term" -> org.apache.spark.sql.types.StringType,
-        "df" -> org.apache.spark.sql.types.LongType)
+      return emptyDf("term" -> StringType, "df" -> LongType)
     dict.filter($"letter" === prefix.substring(0, 1) &&
         $"term".startsWith(prefix))
       .select($"term", $"df")
@@ -1178,9 +1163,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * [[searchFuzzy]] (≤ 52n+27 exact keys, letter-pruned pushed isin —
     * corpus-size-independent). */
   def didYouMean(word: String, k: Int = 5): DataFrame = {
-    val empty = emptyDf(
-      "term" -> org.apache.spark.sql.types.StringType,
-      "df" -> org.apache.spark.sql.types.LongType)
+    val empty = emptyDf("term" -> StringType, "df" -> LongType)
     if (k < 1) return empty
     fuzzyMatched(word, maxEdits = 1) match {
       case None => empty
@@ -1198,13 +1181,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     fuzzyMatched(word, maxEdits) match {
       case None => emptyResult("score")
       case Some((matched, coarse)) =>
-        val words = matched.select($"word", bm25Idf($"df").as("weight"))
-        val scanned = coarse.map(postings.filter).getOrElse(postings)
-        val top = Wand.topK(spark, scanned, words,
-          meta.maxDocId + 1, meta.avgdl, conf, k, exclude = deletedArr)
-        broadcast(top).join(docs, Seq("doc_id"))
-          .select($"conv_id", $"turn_idx", $"score", $"doc_id")
-          .orderBy($"score".desc, $"doc_id").limit(k).drop("doc_id")
+        wandTopK(coarse.map(postings.filter).getOrElse(postings),
+          matched.select($"word", bm25Idf($"df").as("weight")), k)
     }
 
   private def rankedCounts(hits: Option[DataFrame]): DataFrame = hits match {
@@ -1245,22 +1223,23 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       .getOrElse(emptyResult("score"))
 
   /** (doc_id, v) hits of the extended language, counts or BM25 scores.
-    * Each quoted phrase, slop phrase, `~word` fuzzy term and boost is
-    * substituted with a reserved sentinel word before the reference parser
-    * runs, so the parse — validation quirks included — is EXACTLY
-    * [[QueryParser]]'s. Sentinels are masked from the dictionary lookup (a
-    * corpus word can never collide with one); each contributes its own
-    * virtual-term frame under its term_idx instead, unioned into the plain
-    * words' per-term frame before the one evaluator ([[evalHits]]) runs.
-    * None when the query is invalid or has no search words. */
+    * [[Searcher.parseExtended]] turns each extended term into an
+    * exact-quoted sentinel word, so the parse — validation quirks included
+    * — is EXACTLY [[QueryParser]]'s. A sentinel search word skips the
+    * dictionary lookup and contributes its term's frame under its
+    * term_idx instead, unioned into the plain words' per-term frame
+    * before the one evaluator ([[evalHits]]) runs. None when the query is
+    * invalid or has no search words. */
   private def extendedHits(corpus: Dataset[Turn], query: String,
       scoring: Boolean): Option[DataFrame] = {
-    val (rewritten, phraseOf, fuzzyOf, slopOf, boostOf) =
-      Searcher.rewriteExtended(query)
+    import Searcher._
+    val (rewritten, ext) = parseExtended(query)
     val parsed = QueryParser.parse("(" + rewritten + ")", conf.exactMatch)
     if (!parsed.valid || parsed.searchWords.isEmpty) return None
-    def sentinel(w: String): Boolean = phraseOf.contains(w) ||
-      fuzzyOf.contains(w) || slopOf.contains(w) || boostOf.contains(w)
+    // a term is keyed by its exact-quoted sentinel word only: a user's
+    // unquoted word is never a sentinel, whatever it spells
+    def extOf(sw: (String, Boolean)): Option[Ext] =
+      if (sw._2) ext.get(sw._1) else None
     val agg: DataFrame => DataFrame = if (scoring) bm25Agg else countAgg
     def matchedFrame(matched: DataFrame, coarse: Option[Column]) =
       agg(matchedPostings(matched, coarse)).select($"doc_id", $"v")
@@ -1270,42 +1249,36 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       hits.map(h =>
         if (scoring) virtualTermScore(h).select($"doc_id", $"v")
         else h.select($"doc_id", $"cnt".cast("double").as("v")))
-    // a sentinel's (doc_id, v) frame; None when it can match nothing
-    def frameOf(w: String): Option[DataFrame] =
-      if (phraseOf.contains(w)) positional(phraseCounts(corpus, phraseOf(w)))
-      // 'a b'~d slop phrase: co-occurring position pairs within d
-      // (searchNear's counting); >= 3 words count anchors (searchNearAll's)
-      else if (slopOf.contains(w)) {
-        val (p, d) = slopOf(w)
-        positional(slopCounts(corpus, p, d))
-      }
+    // a term's (doc_id, v) frame; None when it can match nothing
+    def frameOf(e: Ext): Option[DataFrame] = e match {
+      case Phrase(text) => positional(phraseCounts(corpus, text))
+      // 'a b'~d: co-occurring position pairs within d (searchNear's
+      // counting); >= 3 words count anchors (searchNearAll's)
+      case Slop(text, d) => positional(slopCounts(corpus, text, d))
       // ~word: the distinct 1-edit dictionary words present in the doc
       // (searchFuzzy's counting), or their summed term scores
       // (searchFuzzyBm25's; the gate query keeps the neighborhood
       // single-match so the oracle is bit-exact)
-      else if (fuzzyOf.contains(w))
-        fuzzyMatched(fuzzyOf(w), maxEdits = 1).map((matchedFrame _).tupled)
-      else boostOf.get(w).flatMap { case (iw, iq, b) =>
-        // term^N: the inner term — possibly itself a sentinel — exactly
-        // as if unboosted; a score scales by the boost (ONE IEEE
-        // multiply, so oracles stay bit-exact), a count does not (boosts
-        // affect scoring only, the Lucene posture)
-        val inner =
-          if (sentinel(iw)) frameOf(iw)
-          else {
-            val terms = Seq((iw, iq || conf.exactMatch))
-            Some(matchedFrame(matchedWords(terms), coarsePred(terms)))
-          }
-        if (scoring) inner.map(_.select($"doc_id", ($"v" * lit(b)).as("v")))
-        else inner
-      }
-    val lookupWords = parsed.searchWords.map { case (w, e) =>
-      if (sentinel(w)) ("", e) else (w, e) }
+      case Fuzzy(w) =>
+        fuzzyMatched(w, maxEdits = 1).map((matchedFrame _).tupled)
+      case Word(w, quoted) =>
+        val terms = Seq((w, quoted || conf.exactMatch))
+        Some(matchedFrame(matchedWords(terms), coarsePred(terms)))
+      // term^N: the inner term exactly as if unboosted; a score scales by
+      // the boost (ONE IEEE multiply, so oracles stay bit-exact), a count
+      // does not (boosts affect scoring only, the Lucene posture)
+      case Boost(inner, b) =>
+        val f = frameOf(inner)
+        if (scoring) f.map(_.select($"doc_id", ($"v" * lit(b)).as("v")))
+        else f
+    }
+    val lookupWords = parsed.searchWords.map { case sw @ (_, e) =>
+      if (extOf(sw).isDefined) ("", e) else sw }
     val perTerm = agg(matchedPostings(matchedWords(lookupWords),
       coarsePred(lookupWords)))
-    val virtual = parsed.searchWords.zipWithIndex.flatMap { case ((w, _), i) =>
-      if (!sentinel(w)) None
-      else frameOf(w).map(_.select(lit(i).as("term_idx"), $"doc_id", $"v"))
+    val virtual = parsed.searchWords.zipWithIndex.flatMap { case (sw, i) =>
+      extOf(sw).flatMap(frameOf)
+        .map(_.select(lit(i).as("term_idx"), $"doc_id", $"v"))
     }
     Some(hitsOf(parsed, (perTerm +: virtual).reduce(_ unionByName _)))
   }
@@ -1330,210 +1303,115 @@ final class Searcher(spark: SparkSession, store: IndexStore,
 
 object Searcher {
 
-  /** n → a, b, …, z, aa, ab, … (sentinel suffixes past 26 phrases). */
-  private def alphaSuffix(n: Int): String = {
-    var x = n
-    val sb = new StringBuilder
-    var first = true
-    while (first || x > 0) {
-      sb.insert(0, ('a' + x % 26).toChar)
-      x /= 26
-      first = false
+  /** A term of the extended query language, as [[parseExtended]] reads
+    * it. A [[Word]] occurs only inside a [[Boost]]. */
+  sealed trait Ext
+  /** A term a boost can wrap. */
+  sealed trait Term extends Ext
+  /** A reference word, unquoted or double-quoted (lowercased). */
+  final case class Word(w: String, quoted: Boolean) extends Term
+  /** `'...'`: the folded words as consecutive kept tokens. */
+  final case class Phrase(text: String) extends Term
+  /** `'...'~d`: the folded words within d kept positions. */
+  final case class Slop(text: String, d: Int) extends Term
+  /** `~word`: the dictionary words one edit from `word` (lowercased). */
+  final case class Fuzzy(word: String) extends Term
+  /** `term^b`: the inner term, its score scaled by b. */
+  final case class Boost(inner: Term, b: Double) extends Ext
+
+  /** The sentinel base [[parseExtended]] starts from. */
+  private[graft] val SentinelBase = "graftextq"
+
+  /** Read the extended query language in one left-to-right pass. Each
+    * extended term becomes one reserved exact-quoted sentinel word, so
+    * [[QueryParser]] parses the rewritten query — validation quirks
+    * included — exactly as it parses the reference grammar. Returns the
+    * rewritten query and sentinel → term.
+    *
+    *  - `'...'~digits` (no space before `~`) is a slop phrase; d is
+    *    clamped by value to 9999 (`~00003` is 3). Any other `'...'`, also
+    *    `'a b' ~3`, is a phrase; a `~` or `^` inside it is phrase text.
+    *  - `~word` is a fuzzy term only at a word start: `foo~bar` and
+    *    `~ word` stay text, which CharFold folds to separators.
+    *  - `^N` (digits, optionally `.digits`) right after a word, a
+    *    double-quoted word or an extended term boosts that term; `word^2.`
+    *    keeps its dot as text. Any other `^` stays text.
+    *  - A double-quoted `"..."` is opaque: a `'` or `~` inside it is part
+    *    of the quoted word, never an extended term.
+    *  - An unterminated `"` passes the rest of the query through verbatim;
+    *    an unterminated `'` is plain text.
+    *
+    * All sentinels share one base, grown until the CharFold-folded query
+    * does not contain it, so no user word — in any case or accenting —
+    * can spell a sentinel. */
+  private[graft] def parseExtended(query: String)
+      : (String, Map[String, Ext]) = {
+    if (query == null) return (query, Map.empty)
+    val n = query.length
+    val folded = query.map(CharFold.fold)
+    var base = SentinelBase
+    while (folded.contains(base)) base += "q"
+    val out = new StringBuilder
+    val terms = scala.collection.mutable.LinkedHashMap.empty[String, Ext]
+    def sentinel(e: Ext): Unit = {
+      // the term's number spelled in letters (0 → a … 9 → j): one word
+      val s = base + terms.size.toString.map(d => (d - '0' + 'a').toChar)
+      terms(s) = e
+      out.append('"').append(s).append('"')
     }
-    sb.toString
-  }
-
-  /** Extended-query rewrite: `'...'~d` proximity phrases, `'...'` exact
-    * phrases, `~word` fuzzy terms, and `term^N` boosts to reserved
-    * exact-quoted sentinels. Slop runs first (it claims only quoted
-    * segments with a `~digits` suffix), then plain phrases (so a `~`
-    * inside a quoted phrase is never rewritten — it stays phrase text),
-    * then fuzzy words, then boosts LAST — a boost's inner word may
-    * therefore itself be an earlier sentinel, which is how `'a b'~2^3`
-    * (boosted slop phrase) and `~word^2` (boosted fuzzy term) compose. */
-  private[graft] def rewriteExtended(query: String)
-      : (String, Map[String, String], Map[String, String],
-         Map[String, (String, Int)], Map[String, (String, Boolean, Double)]) = {
-    val (q0, slopOf) = rewriteSlop(query)
-    val (q1, phraseOf) = rewritePhrases(q0)
-    val (q2, fuzzyOf) = rewriteFuzzy(q1)
-    val (q3, boostOf) = rewriteBoost(q2)
-    (q3, phraseOf, fuzzyOf, slopOf, boostOf)
-  }
-
-  /** Replace `word^N` / `"word"^N` boosted terms (the Lucene boost
-    * syntax; N = digits with an optional `.digits` tail) with reserved
-    * exact-quoted sentinels, returning sentinel → (inner word, was it
-    * quoted, boost). Runs LAST in [[rewriteExtended]], so the inner word
-    * may be a phrase/slop/fuzzy sentinel — evaluation re-dispatches it
-    * and multiplies. A `^` not immediately after a word or closing quote,
-    * or not immediately followed by a digit, passes through verbatim
-    * (CharFold folds it to a separator — the reference's meaning). */
-  private[graft] def rewriteBoost(query: String)
-      : (String, Map[String, (String, Boolean, Double)]) = {
-    if (query == null || !query.contains('^'))
-      return (query, Map.empty)
-    var base = "graftboostq"
-    while (query.contains(base)) base += "q"
-    val sb = new StringBuilder
-    val boosts =
-      scala.collection.mutable.Map.empty[String, (String, Boolean, Double)]
-    var i = 0
-    var n = 0
-    // digits (optionally .digits) starting at j; -1 when not a boost
-    def numEnd(j: Int): Int = {
-      if (j >= query.length || !query.charAt(j).isDigit) return -1
+    // the end of the run of chars from j that satisfy p
+    def runEnd(j: Int, p: Char => Boolean): Int = {
       var k = j
-      while (k < query.length && query.charAt(k).isDigit) k += 1
-      if (k + 1 < query.length && query.charAt(k) == '.' &&
-          query.charAt(k + 1).isDigit) {
-        k += 1
-        while (k < query.length && query.charAt(k).isDigit) k += 1
-      }
+      while (k < n && p(query.charAt(k))) k += 1
       k
     }
-    def claim(word: String, quoted: Boolean, numFrom: Int, numTo: Int): Unit = {
-      val sentinel = base + alphaSuffix(n)
-      n += 1
-      boosts(sentinel) =
-        (word.toLowerCase, quoted, query.substring(numFrom, numTo).toDouble)
-      sb.append('"').append(sentinel).append('"')
+    def digitAt(k: Int): Boolean = k < n && query.charAt(k).isDigit
+    // a `^N` boost at j: (boost, index after it)
+    def boostAt(j: Int): Option[(Double, Int)] =
+      if (j + 1 >= n || query.charAt(j) != '^' || !digitAt(j + 1)) None
+      else {
+        var k = runEnd(j + 1, _.isDigit)
+        if (k + 1 < n && query.charAt(k) == '.' && digitAt(k + 1))
+          k = runEnd(k + 1, _.isDigit)
+        // BigDecimal: isDigit admits non-ASCII digits, which toDouble rejects
+        Some((BigDecimal(query.substring(j + 1, k)).toDouble, k))
+      }
+    // an extended term ending at j: one sentinel, boosted when `^N`
+    // follows; returns the index after it
+    def term(t: Term, j: Int): Int = boostAt(j) match {
+      case Some((b, k)) => sentinel(Boost(t, b)); k
+      case None => sentinel(t); j
     }
-    while (i < query.length) {
+    // a reference word spanning [i, j): verbatim unless boosted
+    def word(w: Word, i: Int, j: Int): Int = boostAt(j) match {
+      case Some((b, k)) => sentinel(Boost(w, b)); k
+      case None => out.append(query.substring(i, j)); j
+    }
+    var i = 0
+    while (i < n) {
       val c = query.charAt(i)
-      if (c == '"') {
-        val end = query.indexOf('"', i + 1)
-        if (end < 0) { sb.append(query.substring(i)); i = query.length }
-        else {
-          val k = if (end + 1 < query.length && query.charAt(end + 1) == '^')
-            numEnd(end + 2) else -1
-          if (k > 0) { claim(query.substring(i + 1, end), quoted = true,
-            end + 2, k); i = k }
-          else { sb.append(query.substring(i, end + 1)); i = end + 1 }
-        }
+      val close = if (c == '"' || c == '\'') query.indexOf(c, i + 1) else -1
+      if (c == '"' && close < 0) { out.append(query.substring(i)); i = n }
+      else if (c == '"')
+        i = word(Word(query.substring(i + 1, close).toLowerCase, quoted = true),
+          i, close + 1)
+      else if (c == '\'' && close >= 0) {
+        val text = query.substring(i + 1, close)
+        val d0 = close + 2
+        if (digitAt(d0) && query.charAt(close + 1) == '~') {
+          val j = runEnd(d0, _.isDigit)
+          val d = BigInt(query.substring(d0, j)).min(9999).toInt
+          i = term(Slop(text, d), j)
+        } else i = term(Phrase(text), close + 1)
+      } else if (c == '~' && i + 1 < n && query.charAt(i + 1).isLetter &&
+          (out.isEmpty || !out.charAt(out.length - 1).isLetter)) {
+        val j = runEnd(i + 1, _.isLetter)
+        i = term(Fuzzy(query.substring(i + 1, j).toLowerCase), j)
       } else if (c.isLetter) {
-        var j = i
-        while (j < query.length && query.charAt(j).isLetter) j += 1
-        val k = if (j < query.length && query.charAt(j) == '^')
-          numEnd(j + 1) else -1
-        if (k > 0) { claim(query.substring(i, j), quoted = false, j + 1, k)
-          i = k }
-        else { sb.append(query.substring(i, j)); i = j }
-      } else { sb.append(c); i += 1 }
+        val j = runEnd(i, _.isLetter)
+        i = word(Word(query.substring(i, j).toLowerCase, quoted = false), i, j)
+      } else { out.append(c); i += 1 }
     }
-    (sb.toString, boosts.toMap)
-  }
-
-  /** Replace `'...'~d` proximity phrases (Lucene's slop syntax over this
-    * language's single-quoted phrases) with reserved exact-quoted
-    * sentinels, returning sentinel → (phrase text, d). Only a quoted
-    * segment whose closing quote is IMMEDIATELY followed by `~digits` is
-    * claimed; everything else — plain phrases, unterminated quotes, a
-    * spaced `'a b' ~3` — passes through verbatim for the later rewrites
-    * (the reference's tolerance posture). d is capped at 9999: beyond
-    * that every in-doc pair qualifies anyway. */
-  private[graft] def rewriteSlop(query: String)
-      : (String, Map[String, (String, Int)]) = {
-    if (query == null || !query.contains('\''))
-      return (query, Map.empty)
-    var base = "graftslopq"
-    while (query.contains(base)) base += "q"
-    val sb = new StringBuilder
-    val slops = scala.collection.mutable.Map.empty[String, (String, Int)]
-    var i = 0
-    var n = 0
-    while (i < query.length) {
-      val c = query.charAt(i)
-      if (c == '\'') {
-        val end = query.indexOf('\'', i + 1)
-        if (end < 0) { sb.append(query.substring(i)); i = query.length }
-        else if (end + 2 < query.length && query.charAt(end + 1) == '~' &&
-            query.charAt(end + 2).isDigit) {
-          var j = end + 2
-          while (j < query.length && query.charAt(j).isDigit) j += 1
-          val dstr = query.substring(end + 2, j)
-          val sentinel = base + alphaSuffix(n)
-          n += 1
-          // numeric clamp, not a length test: '~00003' must mean 3
-          slops(sentinel) = (query.substring(i + 1, end),
-            if (dstr.length > 10) 9999
-            else math.min(dstr.toLong, 9999L).toInt)
-          sb.append('"').append(sentinel).append('"')
-          i = j
-        } else {
-          // plain phrase: pass through verbatim for rewritePhrases
-          sb.append(query.substring(i, end + 1)); i = end + 1
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    (sb.toString, slops.toMap)
-  }
-
-  /** Replace word-initial `~word` tokens with reserved exact-quoted
-    * sentinels (the phrase rewrite's sibling). A `~` inside a word
-    * (`foo~bar`) is left alone — CharFold folds it to a separator, the
-    * reference's meaning. The captured word is ASCII-lowercased;
-    * [[Searcher.fuzzyMatched]] rejects anything else at eval. */
-  private[graft] def rewriteFuzzy(query: String)
-      : (String, Map[String, String]) = {
-    if (query == null || !query.contains('~'))
-      return (query, Map.empty)
-    var base = "graftfuzzyq"
-    while (query.contains(base)) base += "q"
-    val sb = new StringBuilder
-    val words = scala.collection.mutable.Map.empty[String, String]
-    var i = 0
-    var n = 0
-    while (i < query.length) {
-      val c = query.charAt(i)
-      val wordInitial = sb.isEmpty || !sb.charAt(sb.length - 1).isLetter
-      if (c == '~' && wordInitial && i + 1 < query.length &&
-          query.charAt(i + 1).isLetter) {
-        var j = i + 1
-        while (j < query.length && query.charAt(j).isLetter) j += 1
-        val sentinel = base + alphaSuffix(n)
-        n += 1
-        words(sentinel) = query.substring(i + 1, j).toLowerCase
-        sb.append('"').append(sentinel).append('"')
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    (sb.toString, words.toMap)
-  }
-
-  /** Extract `'...'`-quoted phrases from an extended query: returns the
-    * query with each phrase replaced by a reserved EXACT-quoted sentinel
-    * word (so the reference parser — validation quirks included — handles
-    * the rewritten query verbatim, in both wildcard and exactMatch modes)
-    * plus the sentinel→phrase map. The sentinel base grows until it
-    * appears nowhere in the original query, so a user word can never
-    * hijack a phrase slot. An unterminated quote passes the tail through
-    * verbatim (the reference's tolerance posture: malformed pieces simply
-    * fail to match). */
-  private[graft] def rewritePhrases(query: String)
-      : (String, Map[String, String]) = {
-    if (query == null || !query.contains('\''))
-      return (query, Map.empty)
-    var base = "graftphraseq"
-    while (query.contains(base)) base += "q"
-    val sb = new StringBuilder
-    val phrases = scala.collection.mutable.Map.empty[String, String]
-    var i = 0
-    var n = 0
-    while (i < query.length) {
-      val c = query.charAt(i)
-      if (c == '\'') {
-        val end = query.indexOf('\'', i + 1)
-        if (end < 0) { sb.append(query.substring(i)); i = query.length }
-        else {
-          val sentinel = base + alphaSuffix(n)
-          n += 1
-          phrases(sentinel) = query.substring(i + 1, end)
-          sb.append('"').append(sentinel).append('"')
-          i = end + 1
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    (sb.toString, phrases.toMap)
+    (out.toString, terms.toMap)
   }
 }

@@ -14,8 +14,10 @@ import graft.index.{Codec, IndexStore}
   * snapshot returns all zeros.
   *
   * Checks (reference analog in parens):
-  *   - docs: unique doc_id, unique (conv_id, turn_idx), ids dense 0..max
-  *     (paths separators consistency / no duplicate IDs)
+  *   - docs: unique doc_id, unique (conv_id, turn_idx), ids within
+  *     0..maxDocId and exactly maxDocId + 1 - purgedDocs of them (dense
+  *     but for the ids compaction purged) (paths separators consistency /
+  *     no duplicate IDs)
   *   - doc_stats: exactly one row per doc; dl >= word_count >= 0
   *     (counts file size = 4 x paths)
   *   - dict: terms lowercase a-z within the tokenizer's length bounds;
@@ -66,9 +68,13 @@ object IndexCheck {
       "docs_duplicate_ids" -> (count(lit(1)) - countDistinct($"doc_id")),
       "docs_duplicate_keys" ->
         (count(lit(1)) - countDistinct($"conv_id", $"turn_idx")),
-      // coalesce: an EMPTY docs table is vacuously dense (max is null)
+      // ids are never reused, so with unique ids in 0..maxDocId the row
+      // count pins them: every assigned id but the purged ones
+      // (coalesce: an EMPTY docs table has no out-of-range id)
       "docs_ids_dense" ->
-        when(count(lit(1)) === coalesce(max($"doc_id") + 1, lit(0L)), 0L)
+        when(count(lit(1)) === meta.maxDocId + 1 - meta.purgedDocs &&
+          coalesce(min($"doc_id") >= 0 && max($"doc_id") <= meta.maxDocId,
+            lit(true)), 0L)
           .otherwise(1L))
 
     // -- doc_stats: the referential join and the bounds, one pass each

@@ -53,8 +53,7 @@ final class Oracle(conf: EngineConf = EngineConf.default) {
     math.log(1.0 + (n - df + 0.5) / (df + 0.5))
   }
 
-  private def tfNorm(tf: Int, dl: Int): Double = {
-    val ad = avgdl
+  private def tfNorm(tf: Int, dl: Int, ad: Double): Double = {
     val denom = tf + conf.k1 * (1 - conf.b + conf.b * (if (ad == 0) 0.0 else dl / ad))
     tf * (conf.k1 + 1) / denom
   }
@@ -72,23 +71,22 @@ final class Oracle(conf: EngineConf = EngineConf.default) {
   /** Per-search-word doc→BM25 contribution (north-star scoring). */
   def termScores(term: String, isExact: Boolean): Map[DocKey, Double] = {
     val acc = mutable.HashMap.empty[DocKey, Double]
+    // avgdl is a sum over every doc: once per call, not once per posting
+    val ad = avgdl
     matchedWords(term, isExact).foreach { w =>
       val df = postings(w).size.toLong
       val w_idf = idf(df)
       postings(w).foreach { case (d, (tf, dl)) =>
-        acc.update(d, acc.getOrElse(d, 0.0) + w_idf * tfNorm(tf, dl))
+        acc.update(d, acc.getOrElse(d, 0.0) + w_idf * tfNorm(tf, dl, ad))
       }
     }
     acc.toMap
   }
 
-  private final class MapAlgebra[N](perTerm: Int => Map[DocKey, N],
-      parsed: QueryParser.Parsed)(implicit num: Numeric[N])
-      extends ResultAlgebra[Map[DocKey, N]] {
+  private final class MapAlgebra[N](perTerm: Int => Map[DocKey, N])(
+      implicit num: Numeric[N]) extends ResultAlgebra[Map[DocKey, N]] {
     def empty = Map.empty
-    def term(i: Int): Map[DocKey, N] = {
-      val (t, ex) = parsed.searchWords(i); val _ = (t, ex); perTerm(i)
-    }
+    def term(i: Int): Map[DocKey, N] = perTerm(i)
     def or(acc: Map[DocKey, N], x: Map[DocKey, N]) =
       x.foldLeft(acc) { case (m, (d, c)) =>
         m.updated(d, num.plus(m.getOrElse(d, num.zero), c)) }
@@ -102,9 +100,8 @@ final class Oracle(conf: EngineConf = EngineConf.default) {
     * wrapped in parens like Search::search (Search.cpp:345-346). */
   def searchCount(query: String): Seq[(DocKey, Long)] = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
-    val cache = parsed.searchWords.zipWithIndex.map { case ((t, e), _) =>
-      termCounts(t, e) }
-    val alg = new MapAlgebra[Long](cache(_), parsed)
+    val cache = parsed.searchWords.map { case (t, e) => termCounts(t, e) }
+    val alg = new MapAlgebra[Long](cache(_))
     parsed.eval(alg).getOrElse(Map.empty).toSeq
       .sortBy { case (d, c) => (-c, d.conv_id, d.turn_idx) }
   }
@@ -112,9 +109,8 @@ final class Oracle(conf: EngineConf = EngineConf.default) {
   /** BM25 search over the same boolean structure; top-k. */
   def searchBm25(query: String, k: Int): Seq[(DocKey, Double)] = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
-    val cache = parsed.searchWords.zipWithIndex.map { case ((t, e), _) =>
-      termScores(t, e) }
-    val alg = new MapAlgebra[Double](cache(_), parsed)
+    val cache = parsed.searchWords.map { case (t, e) => termScores(t, e) }
+    val alg = new MapAlgebra[Double](cache(_))
     parsed.eval(alg).getOrElse(Map.empty).toSeq
       .sortBy { case (d, s) => (-s, d.conv_id, d.turn_idx) }
       .take(k)

@@ -7,9 +7,9 @@ import graft.index.{IndexBuilder, IndexStore}
 import graft.model.DocKey
 import graft.search.Searcher
 
-/** `term^N` boosts in the extended boolean language: rewrite unit cases,
-  * scoring composition identities (plain, wildcard, quoted, and boosted
-  * slop/fuzzy sentinels), and the Lucene posture that counting ignores
+/** `term^N` boosts in the extended boolean language: the scanner's unit
+  * cases, scoring composition identities (plain, wildcard, quoted, and
+  * boosted slop/fuzzy sentinels), and the Lucene posture that counting ignores
   * boosts entirely. */
 class BoostSpec extends SparkTestBase {
   import spark.implicits._
@@ -44,29 +44,24 @@ class BoostSpec extends SparkTestBase {
     }.toMap
 
   test("rewriteBoost unit cases") {
-    val (r1, m1) = Searcher.rewriteBoost("customer^2")
-    assert(m1.values.toSeq == Seq(("customer", false, 2.0)))
-    assert(r1 == "\"" + m1.keys.head + "\"")
-    val (r2, m2) = Searcher.rewriteBoost("\"Customer\"^2.5 AND stream")
-    assert(m2.values.toSeq == Seq(("customer", true, 2.5)))
-    assert(r2.endsWith(" AND stream"))
-    // passthroughs: ^ not after a word/quote, or not followed by a digit
-    for (q <- Seq("a ^2", "word^", "word^x", "2^2", "w ^ 3"))
-      assert(Searcher.rewriteBoost(q) == ((q, Map.empty)), q)
-    // digits then a bare dot: the dot stays query text
-    val (r3, m3) = Searcher.rewriteBoost("word^2.")
-    assert(m3.values.toSeq == Seq(("word", false, 2.0)) && r3.endsWith("\"."))
-    // sentinel base collision grows
-    val (_, m4) = Searcher.rewriteBoost("graftboostqa word^3")
-    assert(m4.keys.head.startsWith("graftboostqq"))
-    // composition: boost runs LAST, so slop/fuzzy sentinels can be boosted
-    val (rwe, pm, fm, sm, bm) = Searcher.rewriteExtended(
-      "'alpha bravo'~2^3 AND ~wordz^2 OR \"stream\"^1.5")
-    assert(pm.isEmpty && sm.size == 1 && fm.size == 1 && bm.size == 3)
-    val inners = bm.values.map(_._1).toSet
-    assert(inners == Set(sm.keys.head, fm.keys.head, "stream"))
-    assert(bm.values.map(_._3).toSet == Set(3.0, 2.0, 1.5))
-    assert(!rwe.contains("^") && !rwe.contains("~") && !rwe.contains("'"))
+    import Searcher._
+    // ^N right after a word, a quoted word or an extended term; boost
+    // applies last, so slop and fuzzy terms can be boosted
+    PhraseSpec.checkExtRows(Seq(
+      ("customer^2", "$0", Seq(Boost(Word("customer", quoted = false), 2.0))),
+      ("\"Customer\"^2.5 AND stream", "$0 AND stream",
+        Seq(Boost(Word("customer", quoted = true), 2.5))),
+      ("a ^2", "a ^2", Nil),
+      ("word^", "word^", Nil),
+      ("word^x", "word^x", Nil),
+      ("2^2", "2^2", Nil),
+      ("w ^ 3", "w ^ 3", Nil),
+      ("word^2.", "$0.", Seq(Boost(Word("word", quoted = false), 2.0))),
+      ("graftboostqa word^3", "graftboostqa $0",
+        Seq(Boost(Word("word", quoted = false), 3.0))),
+      ("'alpha bravo'~2^3 AND ~wordz^2 OR \"stream\"^1.5", "$0 AND $1 OR $2",
+        Seq(Boost(Slop("alpha bravo", 2), 3.0), Boost(Fuzzy("wordz"), 2.0),
+          Boost(Word("stream", quoted = true), 1.5)))))
   }
 
   test("boosted scores compose: quoted, wildcard, and ^1 identity") {

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 
 import graft.fixtures.TranscriptGen
-import graft.index.{Compactor, IndexBuilder, IndexMerger, IndexStore}
+import graft.index.{Compactor, IndexBuilder, IndexDeleter, IndexMerger,
+  IndexStore}
 import graft.model.{DocKey, EngineConf, Turn}
 import graft.search.Searcher
 import graft.verify.IndexCheck
@@ -54,6 +55,36 @@ class CompactionSpec extends SparkTestBase {
     val after = new Searcher(spark, store, conf)
     queries.foreach(q => assert(counts(after, q) == before(q), s"query: $q"))
     assert(IndexCheck.healthy(spark, store))
+  }
+
+  test("purge compaction: ids kept, purge counted, healthy through a merge") {
+    import spark.implicits._
+    val dir = tmpDir("graft-compact-purge")
+    IndexBuilder.build(spark,
+      TranscriptGen.dataset(spark, N, partitions = 4), dir, conf)
+    val store = new IndexStore(dir)
+    // a conversation mid-range and the last one: purged ids below the top
+    // and at it
+    val keys = Seq(TranscriptGen.convId(3), TranscriptGen.convId(N - 1))
+      .toDF("conv_id")
+    val (_, nDel) = IndexDeleter.delete(spark, dir, keys)
+    assert(nDel > 1)
+    val before = store.currentMeta
+
+    val meta = Compactor.compact(spark, dir, conf)
+    assert(meta.numDocs == before.numDocs - nDel)
+    assert(meta.maxDocId == before.maxDocId)
+    assert(meta.purgedDocs == nDel)
+    assert(IndexCheck.healthy(spark, store))
+
+    // a later merge assigns fresh ids above every id ever assigned and
+    // carries the purge count forward
+    IndexMerger.merge(spark,
+      TranscriptGen.batch2Dataset(spark, N, Extra, Overlap), dir, conf)
+    val merged = new IndexStore(dir).currentMeta
+    assert(merged.purgedDocs == nDel)
+    assert(merged.maxDocId > before.maxDocId)
+    assert(IndexCheck.healthy(spark, new IndexStore(dir)))
   }
 
   test("gc reclaims versions a compacted snapshot no longer references") {

@@ -172,30 +172,18 @@ class FuzzySearchSpec extends SparkTestBase {
   }
 
   test("rewriteFuzzy: sentinels, interior tilde, collision, case") {
-    assert(Searcher.rewriteFuzzy("plain (query AND words)") ==
-      (("plain (query AND words)", Map.empty)))
-    val (rw, m) = Searcher.rewriteFuzzy("~stram AND words")
-    assert(m.size == 1 && m.values.head == "stram")
-    assert(rw == s""""${m.keys.head}" AND words""")
-    // interior tilde is CharFold separator text, not a fuzzy marker
-    assert(Searcher.rewriteFuzzy("foo~bar") == (("foo~bar", Map.empty)))
-    // a user word containing the sentinel base grows the base
-    val (_, m2) = Searcher.rewriteFuzzy("graftfuzzyqa OR ~word")
-    assert(m2.keys.head.startsWith("graftfuzzyqq"))
-    // the captured word is lowercased for the dictionary probe
-    val (_, m3) = Searcher.rewriteFuzzy("~STRAM")
-    assert(m3.values.head == "stram")
-    // tilde before a non-letter passes through verbatim
-    assert(Searcher.rewriteFuzzy("~ word ~4x") == (("~ word ~4x", Map.empty)))
-    // two fuzzy terms get distinct sentinels
-    val (rw4, m4) = Searcher.rewriteFuzzy("~stram OR ~strap")
-    assert(m4.size == 2 && m4.values.toSet == Set("stram", "strap"))
-    assert(m4.keys.toSeq.distinct.length == 2 && !rw4.contains("~"))
-    // a tilde inside a quoted phrase survives the combined rewrite
-    val (rwe, pm, fm, sm, bm) =
-      Searcher.rewriteExtended("'alpha ~beta' AND ~stram")
-    assert(pm.values.toSeq == Seq("alpha ~beta") && fm.values.toSeq ==
-      Seq("stram") && sm.isEmpty && bm.isEmpty && !rwe.contains("~"))
+    import Searcher.{Fuzzy => F, Phrase}
+    // word-initial ~ before a letter, lowercased; an interior tilde is
+    // CharFold separator text, a tilde inside a quoted phrase its text
+    PhraseSpec.checkExtRows(Seq(
+      ("~stram AND words", "$0 AND words", Seq(F("stram"))),
+      ("foo~bar", "foo~bar", Nil),
+      ("graftfuzzyqa OR ~word", "graftfuzzyqa OR $0", Seq(F("word"))),
+      ("~STRAM", "$0", Seq(F("stram"))),
+      ("~ word ~4x", "~ word ~4x", Nil),
+      ("~stram OR ~strap", "$0 OR $1", Seq(F("stram"), F("strap"))),
+      ("'alpha ~beta' AND ~stram", "$0 AND $1",
+        Seq(Phrase("alpha ~beta"), F("stram")))))
   }
 
   private def key(t: Turn): DocKey = DocKey(t.conv_id, t.turn_idx)

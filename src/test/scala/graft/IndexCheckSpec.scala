@@ -34,6 +34,25 @@ class IndexCheckSpec extends SparkTestBase {
     assert(r2.values.forall(_ == 0L), s"violations: ${r2.filter(_._2 > 0)}")
   }
 
+  test("a doc row removed without a purge trips docs_ids_dense") {
+    def withoutDoc(id: Long => Long): Map[String, Long] = {
+      val root = tmpDir("graft-check-docs")
+      IndexBuilder.build(spark, TranscriptGen.dataset(spark, 20), root, conf)
+      val store = new IndexStore(root)
+      val docsDir = java.nio.file.Paths.get(store.currentDir.get, "docs")
+      val tmp = java.nio.file.Paths.get(root, "docs-tmp")
+      store.docs(spark).filter($"doc_id" =!= id(store.currentMeta.maxDocId))
+        .write.parquet(tmp.toString)
+      IndexBuilder.deleteRecursive(docsDir)
+      java.nio.file.Files.move(tmp, docsDir)
+      IndexCheck.run(spark, new IndexStore(root)).as[(String, Long)]
+        .collect().toMap
+    }
+    assert(withoutDoc(_ => 3L)("docs_ids_dense") == 1L)
+    // the top row too, which a count == max(doc_id) + 1 check cannot see
+    assert(withoutDoc(max => max)("docs_ids_dense") == 1L)
+  }
+
   test("a corrupted posting part is flagged") {
     val root = tmpDir("graft-check-bad")
     IndexBuilder.build(spark, TranscriptGen.dataset(spark, 20), root, conf)

@@ -368,21 +368,69 @@ class PhraseSpec extends SparkTestBase {
   }
 
   test("rewritePhrases: sentinels, passthrough, collision, unterminated") {
-    assert(Searcher.rewritePhrases("plain (query AND words)") ==
-      (("plain (query AND words)", Map.empty)))
-    val (rw, m) = Searcher.rewritePhrases("'alpha bravo' AND words")
-    assert(m.size == 1 && m.values.head == "alpha bravo")
-    assert(rw == s""""${m.keys.head}" AND words""")
-    // a user word containing the sentinel base grows the base
-    val (_, m2) = Searcher.rewritePhrases("graftphraseqa OR 'x y'")
-    assert(m2.keys.head.startsWith("graftphraseqq"))
-    // unterminated quote: tail passes through verbatim, no phrase
-    assert(Searcher.rewritePhrases("alpha 'unclosed bravo") ==
-      (("alpha 'unclosed bravo", Map.empty)))
-    // two phrases get distinct sentinels
-    val (rw3, m3) = Searcher.rewritePhrases("'a b' OR 'c d'")
-    assert(m3.size == 2 && m3.values.toSet == Set("a b", "c d"))
-    assert(m3.keys.toSeq.distinct.length == 2 && !rw3.contains("'"))
+    import Searcher._
+    PhraseSpec.checkExtRows(Seq(
+      ("no quotes here", "no quotes here", Nil),
+      ("'alpha bravo' AND words", "$0 AND words", Seq(Phrase("alpha bravo"))),
+      ("'a b' OR 'c d'", "$0 OR $1", Seq(Phrase("a b"), Phrase("c d"))),
+      ("alpha 'unclosed bravo", "alpha 'unclosed bravo", Nil),
+      ("graftphraseqa OR 'x y'", "graftphraseqa OR $0", Seq(Phrase("x y")))))
+  }
+
+  test("rewriteSlop: sentinels, spaced tilde, plain phrases, cap") {
+    import Searcher._
+    // ~digits right after the closing quote, clamped by value; a spaced
+    // tilde leaves a plain phrase
+    PhraseSpec.checkExtRows(Seq(
+      ("'alpha bravo'~3 AND words", "$0 AND words",
+        Seq(Slop("alpha bravo", 3))),
+      ("'alpha bravo' ~3", "$0 ~3", Seq(Phrase("alpha bravo"))),
+      ("'alpha bravo' AND 'c d'~2", "$0 AND $1",
+        Seq(Phrase("alpha bravo"), Slop("c d", 2))),
+      ("alpha 'unclosed~3", "alpha 'unclosed~3", Nil),
+      ("'alpha bravo'~123456789", "$0", Seq(Slop("alpha bravo", 9999))),
+      ("'alpha bravo'~00003", "$0", Seq(Slop("alpha bravo", 3))),
+      ("'alpha bravo'~000000000003", "$0", Seq(Slop("alpha bravo", 3))),
+      ("'alpha bravo'~99999999999999999999999", "$0",
+        Seq(Slop("alpha bravo", 9999))),
+      ("graftslopqa 'a b'~1", "graftslopqa $0", Seq(Slop("a b", 1))),
+      ("'alpha bravo'~2 OR 'c d' OR ~wordz", "$0 OR $1 OR $2",
+        Seq(Slop("alpha bravo", 2), Phrase("c d"), Fuzzy("wordz")))))
+  }
+
+  test("parseExtended: every extended form as one typed term (table)") {
+    import Searcher._
+    // the per-kind rows are the rewritePhrases / rewriteSlop tests here,
+    // FuzzySearchSpec's rewriteFuzzy and BoostSpec's rewriteBoost
+    PhraseSpec.checkExtRows(Seq(
+      // plain reference grammar passes through
+      ("plain (query AND words)", "plain (query AND words)", Nil),
+      // a double-quoted word is opaque: a ' or ~ inside it is its text
+      ("\"it's ~word\" AND 'a b'", "\"it's ~word\" AND $0", Seq(Phrase("a b"))),
+      // a word spelling the first sentinel, in any case or accenting,
+      // moves the base
+      ("GRAFTEXTQA OR 'x y'", "GRAFTEXTQA OR $0", Seq(Phrase("x y"))),
+      ("\"gräftextqa\" OR 'x y'", "\"gräftextqa\" OR $0", Seq(Phrase("x y")))))
+    // the base grows past every folded spelling of it
+    assert(parseExtended("GRAFTEXTQA 'x y'")._2.keys.head
+      .startsWith(SentinelBase + "q"))
+    assert(parseExtended(null) == ((null, Map.empty)))
+  }
+
+  test("a user word spelling a sentinel counts like the phrase alone") {
+    def run(q: String): Map[DocKey, Long] =
+      edgeSearcher.searchCountWithPhrases(spark.createDataset(edge), q)
+        .collect().map {
+          case Row(c: String, t: Int, n: Long) => DocKey(c, t) -> n
+        }.toMap
+    val alone = run("'alpha bravo'")
+    assert(alone.nonEmpty)
+    // the scanner's first sentinel and another sentinel-shaped word,
+    // uppercase and accented (À, Ä fold to a), unquoted and quoted
+    val first = (Searcher.SentinelBase + "a").toUpperCase
+    for (w <- Seq(first, first.replace('A', 'Ä'), "GRAFTPHRASEQA",
+        "GRÀFTPHRASEQA", "\"" + first + "\""))
+      assert(run(s"$w OR 'alpha bravo'") == alone, w)
   }
 
   test("phrases compose in the boolean algebra (engine extension)") {
@@ -467,41 +515,6 @@ class PhraseSpec extends SparkTestBase {
       .collect().map {
         case Row(c: String, t: Int, s: Double) => (DocKey(c, t), s) }.toMap
     assert(plainExt == plainRef)
-  }
-
-  test("rewriteSlop: sentinels, spaced tilde, plain phrases, cap") {
-    assert(Searcher.rewriteSlop("no quotes here") ==
-      (("no quotes here", Map.empty)))
-    val (rw, m) = Searcher.rewriteSlop("'alpha bravo'~3 AND words")
-    assert(m.size == 1 && m.values.head == (("alpha bravo", 3)))
-    assert(rw == s""""${m.keys.head}" AND words""")
-    // a spaced tilde is NOT slop: the phrase passes through verbatim
-    assert(Searcher.rewriteSlop("'alpha bravo' ~3") ==
-      (("'alpha bravo' ~3", Map.empty)))
-    // a plain phrase is untouched (rewritePhrases' job)
-    assert(Searcher.rewriteSlop("'alpha bravo' AND 'c d'~2")._1
-      .startsWith("'alpha bravo' AND "))
-    // unterminated quote passes through
-    assert(Searcher.rewriteSlop("alpha 'unclosed~3") ==
-      (("alpha 'unclosed~3", Map.empty)))
-    // distance cap is NUMERIC, not digit-count: zero-padded small
-    // distances survive, huge and overflow-length values clamp
-    val (_, mBig) = Searcher.rewriteSlop("'alpha bravo'~123456789")
-    assert(mBig.values.head._2 == 9999)
-    val (_, mPad) = Searcher.rewriteSlop("'alpha bravo'~00003")
-    assert(mPad.values.head._2 == 3)
-    val (_, mOvf) =
-      Searcher.rewriteSlop("'alpha bravo'~99999999999999999999999")
-    assert(mOvf.values.head._2 == 9999)
-    // sentinel base collision grows
-    val (_, mc) = Searcher.rewriteSlop("graftslopqa 'a b'~1")
-    assert(mc.keys.head.startsWith("graftslopqq"))
-    // all three extension kinds together
-    val (rwe, pm, fm, sm, bm) =
-      Searcher.rewriteExtended("'alpha bravo'~2 OR 'c d' OR ~wordz")
-    assert(sm.values.toSeq == Seq(("alpha bravo", 2)) &&
-      pm.values.toSeq == Seq("c d") && fm.values.toSeq == Seq("wordz") &&
-      bm.isEmpty && !rwe.contains("'") && !rwe.contains("~"))
   }
 
   test("slop phrases compose in the boolean count algebra") {
@@ -625,4 +638,26 @@ class PhraseSpec extends SparkTestBase {
     assert(res.map(_._2).toSeq == res.map(_._2).toSeq.sorted(
       Ordering[Double].reverse))
   }
+}
+
+object PhraseSpec {
+  import org.scalatest.Assertions._
+
+  /** Checks [[Searcher.parseExtended]] on rows of (query, rewritten query
+    * with `$i` for the i-th sentinel, the typed terms in order). */
+  def checkExtRows(rows: Seq[(String, String, Seq[Searcher.Ext])]): Unit =
+    for ((q, rewritten, terms) <- rows) {
+      val (out, ext) = Searcher.parseExtended(q)
+      val folded = q.map(graft.tokenize.CharFold.fold)
+      // the sentinels in order of appearance, each an exact-quoted word
+      val names = "\"([a-z]+)\"".r.findAllMatchIn(out).map(_.group(1))
+        .filter(ext.contains).toSeq
+      assert(names.map(ext) == terms, q)
+      assert(ext.size == terms.size, q)
+      // no row has ten terms, so a sentinel is its base plus one letter
+      assert(names.forall(n => !folded.contains(n.dropRight(1))), q)
+      val generic = names.zipWithIndex.foldLeft(out) { case (o, (n, i)) =>
+        o.replace("\"" + n + "\"", "$" + i) }
+      assert(generic == rewritten, q)
+    }
 }

@@ -2,6 +2,7 @@ package graft.search
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,8 +23,9 @@ import graft.tokenize.{CharFold, GraftPhraseCount}
   * column expression per doc ([[evalHits]]) → ranked output.
   *
   * A Searcher is safe to share across threads: queries build lazy frames
-  * and keep no per-query state. Only [[warm]] and [[close]] mutate it (the
-  * dictionary and doc-key pins), and they serialize on one lock.
+  * and keep no per-query state. Only [[warm]] and [[close]] (the
+  * dictionary and doc-key pins) and the first WAND query (the tombstone
+  * broadcast) mutate it, and they serialize on one lock.
   *
   * `asOf` pins the searcher to an OLDER committed snapshot version —
   * point-in-time search over the LSM store (the Elasticsearch PIT /
@@ -70,19 +72,13 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   // tombstone masking (the Lucene live-docs contract, [[graft.index
   // .IndexDeleter]]): deleted docs stop matching IMMEDIATELY — the doc-key
   // resolution join below excludes them, [[maskHits]] guards every
-  // rank-then-limit path, and WAND skips them via [[deletedArr]] — while
-  // collection statistics (meta.numDocs/avgdl, per-term df) stay as-of the
-  // snapshot until compaction purges. An index with no tombstones keeps
-  // every plan byte-identical (None short-circuits all three).
+  // rank-then-limit path, and WAND skips them via [[deletedBroadcast]] —
+  // while collection statistics (meta.numDocs/avgdl, per-term df) stay
+  // as-of the snapshot until compaction purges. An index with no
+  // tombstones keeps every frame plan byte-identical (None short-circuits
+  // the joins).
   private lazy val deletedIds: Option[DataFrame] =
     store.deletedIdsAt(spark, version)
-
-  /** Tombstones as a sorted array for WAND's per-shard skip check —
-    * bounded by deletes-since-compaction, collected once per Searcher. */
-  private lazy val deletedArr: Array[Long] = deletedIds match {
-    case None => Array.emptyLongArray
-    case Some(del) => del.as[Long].collect().sorted
-  }
 
   private lazy val docs: DataFrame = {
     val base = store.docsAt(spark, version)
@@ -100,14 +96,27 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     case Some(del) => hits.join(broadcast(del), Seq("doc_id"), "left_anti")
   }
 
-  // the only mutable state: the warm pins. Queries hold no per-query
-  // state, so any number of client threads may share one Searcher; warm()
-  // and close() serialize on pinLock, and a warm() racing or following
-  // close() must not re-pin frames on a closed Searcher
+  // the only mutable state: the warm pins and the tombstone broadcast.
+  // Queries hold no per-query state, so any number of client threads may
+  // share one Searcher; warm(), close() and the broadcast's creation
+  // serialize on pinLock, and a warm() racing or following close() must
+  // not re-pin frames on a closed Searcher
   private val pinLock = new Object
   private var isClosed = false
   private var dictWarmed = false
   private var docsWarmed = false
+  private var deletedBc: Broadcast[Array[Long]] = null
+
+  /** Tombstones as a sorted array for WAND's per-shard skip check,
+    * collected and broadcast once per Searcher on first use (tasks read
+    * one executor-side copy instead of carrying the set in every closure)
+    * and released by [[close]]. */
+  private def deletedBroadcast: Broadcast[Array[Long]] = pinLock.synchronized {
+    if (deletedBc == null)
+      deletedBc = spark.sparkContext.broadcast(deletedIds
+        .fold(Array.emptyLongArray)(_.as[Long].collect().sorted))
+    deletedBc
+  }
 
   /** Test hook: whether the warm-path dictionary pin is still in effect. */
   private[graft] def warmed: Boolean = dictWarmed
@@ -134,11 +143,13 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     }
   }
 
-  /** Release the warm pins — call when done with the Searcher. */
+  /** Release the warm pins and the tombstone broadcast — call when done
+    * with the Searcher. */
   def close(): Unit = pinLock.synchronized {
     isClosed = true
     if (dictWarmed) { dict.unpersist(blocking = false); dictWarmed = false }
     if (docsWarmed) { docs.unpersist(blocking = false); docsWarmed = false }
+    if (deletedBc != null) { deletedBc.destroy(); deletedBc = null }
   }
 
   // the posting decoder as a native Catalyst generator (graft_postings):
@@ -432,10 +443,11 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   }
 
   /** Shared BM25 building blocks — ONE definition each, so the scoring
-    * paths (WAND dispatch weights, DataFrame algebra, phrase virtual
-    * terms) can never drift apart in the last ulp and silently break the
-    * hash-exact oracle contract (r5 review finding). `bm25TfNorm` reads
-    * the frame's `dl` column. */
+    * paths (DataFrame algebra, phrase virtual terms) can never drift apart
+    * in the last ulp and silently break the hash-exact oracle contract (r5
+    * review finding); [[Wand.topK]] computes its term weights with the
+    * same operations in the same order. `bm25TfNorm` reads the frame's
+    * `dl` column. */
   private def bm25Idf(df: Column): Column = {
     val n = lit(meta.numDocs.toDouble)
     log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
@@ -478,33 +490,32 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     searchBm25Df(parsed, k)
   }
 
-  /** WAND path: matched words collapse to a (word, weight) frame with
-    * weight = idf × multiplicity (a word matched by two search terms
-    * contributes twice, like two OR'd per-term passes); the frame stays
-    * distributed — [[Wand.topK]] broadcast-joins it against the postings
-    * scan, so wide wildcards never collect to the driver. */
+  /** WAND path: the postings scan, filtered by the query's match
+    * conditions alone (letter equality prunes the letter= partitions,
+    * equals/startsWith push to parquet min/max file skipping), IS the
+    * matched-word set — no dictionary read. A part's `mult` is the number
+    * of conditions its term meets: a word matched by two search terms
+    * contributes twice, like two OR'd per-term passes. */
   private def searchBm25Wand(parsed: QueryParser.Parsed, k: Int): DataFrame = {
-    val words = matchedWords(parsed.searchWords)
-      .groupBy($"word").agg(count(lit(1)).as("mult"), first($"df").as("df"))
-      .select($"word", (bm25Idf($"df") * $"mult").as("weight"))
-    // coarse scan predicate from the query words alone (no job): letter
-    // equality prunes the letter= partitions, equals/startsWith push to
-    // parquet min/max file skipping; the broadcast join refines to the
-    // exact matched-word set with its weight
-    val coarse = coarsePred(parsed.searchWords)
-    if (coarse.isEmpty) return emptyResult("score")
-    wandTopK(postings.filter(coarse.get), words, k)
+    val conds = matchConds(parsed.searchWords)
+    coarseOf(conds) match {
+      case None => emptyResult("score")
+      case Some(coarse) =>
+        val mult = conds.map { case (_, c) => when(c, 1).otherwise(0) }
+          .reduce(_ + _)
+        wandTopK(postings.filter(coarse).withColumn("mult", mult), k)
+    }
   }
 
-  /** Block-max WAND top-k over the `scanned` postings for the (word,
-    * weight) frame `words`, keys resolved against the docs table and
-    * ranked (score desc, doc id). `drop` removes matching docs after WAND:
-    * WAND then ranks k + 1, since the one dropped doc (a seed) may hold
-    * a slot. */
-  private def wandTopK(scanned: DataFrame, words: DataFrame, k: Int,
+  /** Block-max WAND top-k over the matched posting `parts` (with their
+    * `mult` column; [[Wand.topK]] weighs each term from the parts' df),
+    * keys resolved against the docs table and ranked (score desc, doc id).
+    * `drop` removes matching docs after WAND: WAND then ranks k + 1, since
+    * the one dropped doc (a seed) may hold a slot. */
+  private def wandTopK(parts: DataFrame, k: Int,
       drop: Option[Column] = None): DataFrame = {
-    val top = Wand.topK(spark, scanned, words, meta.maxDocId + 1,
-      meta.avgdl, conf, if (drop.isEmpty) k else k + 1, exclude = deletedArr)
+    val top = Wand.topK(spark, parts, meta.maxDocId + 1, meta.numDocs,
+      meta.avgdl, conf, if (drop.isEmpty) k else k + 1, deletedBroadcast)
     // the top-k side is k rows — broadcast it so resolving doc keys is a
     // map-side lookup over the docs scan, not a sort-merge join
     val resolved = broadcast(top).join(docs, Seq("doc_id"))
@@ -1019,16 +1030,14 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     val n = meta.numDocs.toDouble
     def idf(df: Long): Double = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
     val chosen = terms
-      .flatMap(t => dfMap.get(t).map(df => (t, tf(t) * idf(df), idf(df))))
-      .sortBy { case (t, s, _) => (-s, t) }.take(nTerms)
+      .flatMap(t => dfMap.get(t).map(df => (t, tf(t) * idf(df))))
+      .sortBy { case (t, s) => (-s, t) }.take(nTerms)
     if (chosen.isEmpty) return emptyResult("score")
-    val words = spark.createDataFrame(
-      chosen.map { case (t, _, w) => (t, w) }).toDF("word", "weight")
     val coarse = $"letter".isin(chosen.map(_._1.substring(0, 1)).distinct: _*) &&
       $"term".isin(chosen.map(_._1): _*)
     // the seed is a perfect self-match and may occupy one WAND slot;
     // dropping it afterwards still leaves the true non-seed top-k
-    wandTopK(postings.filter(coarse), words, k,
+    wandTopK(postings.filter(coarse).withColumn("mult", lit(1)), k,
       drop = Some($"conv_id" === convId && $"turn_idx" === turnIdx))
   }
 
@@ -1046,21 +1055,21 @@ final class Searcher(spark: SparkSession, store: IndexStore,
 
   // ---- fuzzy term search (engine extension) -------------------------------
 
-  /** Dictionary words within `maxEdits` edits of the query word, as a
-    * (matched-words frame, coarse postings predicate) pair — the
-    * [[matchedWords]]/[[coarsePred]] analog for approximate matching.
+  /** The match condition, over a dictionary or postings row's `term`
+    * (and `letter`), of the words within `maxEdits` edits of the query
+    * word — the [[matchCond]] analog for approximate matching. None when
+    * no word can match.
     *
     * maxEdits == 1 probes the bounded generated neighborhood
     * ([[Fuzzy.neighborhood1]] — at most 52n+27 keys for a length-n word,
-    * independent of corpus size) as exact dictionary keys: the scan keeps
+    * independent of corpus size) as exact keys: a scan keeps
     * letter-partition pruning and pushed isin predicates exactly like an
-    * exact-term query. maxEdits >= 2 falls back to a dictionary scan with
-    * Spark's bounded `levenshtein(l, r, threshold)` — vocabulary-sized
+    * exact-term query. maxEdits >= 2 falls back to Spark's bounded
+    * `levenshtein(l, r, threshold)` — vocabulary-sized on the dictionary
     * (sublinear in corpus), but no letter pruning is possible because one
-    * edit can rewrite the first character; the postings scan then has no
-    * coarse predicate and relies on the matched-words join. */
-  private def fuzzyMatched(word: String, maxEdits: Int)
-      : Option[(DataFrame, Option[Column])] = {
+    * edit can rewrite the first character, so the count path reads the
+    * postings unfiltered and relies on the matched-words join. */
+  private def fuzzyMatched(word: String, maxEdits: Int): Option[Column] = {
     if (word == null || word.isEmpty || maxEdits < 1 ||
         word.exists(c => c < 'a' || c > 'z'))
       return None
@@ -1068,20 +1077,19 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       val cands = Fuzzy.neighborhood1(word)
       if (cands.isEmpty) return None
       val letters = cands.map(_.substring(0, 1)).distinct
-      val cond = $"letter".isin(letters: _*) && $"term".isin(cands: _*)
-      Some((dict.filter(cond)
-        .select(lit(0).as("term_idx"), $"term".as("word"), $"df"),
-        Some(cond)))
-    } else {
+      Some($"letter".isin(letters: _*) && $"term".isin(cands: _*))
+    } else
       // threshold form returns -1 when the distance EXCEEDS maxEdits (and
       // short-circuits the row), so "within" is >= 0, not <= maxEdits
-      val cond = length($"term")
+      Some(length($"term")
         .between(word.length - maxEdits, word.length + maxEdits) &&
-        levenshtein($"term", lit(word), maxEdits) >= 0
-      Some((dict.filter(cond)
-        .select(lit(0).as("term_idx"), $"term".as("word"), $"df"), None))
-    }
+        levenshtein($"term", lit(word), maxEdits) >= 0)
   }
+
+  /** The matched-words frame (term_idx 0, word, df) of the dictionary
+    * words meeting `cond`. */
+  private def wordsWhere(cond: Column): DataFrame =
+    dict.filter(cond).select(lit(0).as("term_idx"), $"term".as("word"), $"df")
 
   /** Shared matched-words counting tail (fuzzy/regex matchers): postings
     * hold each doc once per word, so count(1) per doc = distinct matched
@@ -1103,7 +1111,9 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   def searchFuzzy(word: String, maxEdits: Int = 1): DataFrame =
     fuzzyMatched(word, maxEdits) match {
       case None => emptyResult("cnt")
-      case Some((matched, coarse)) => countMatched(matched, coarse)
+      case Some(cond) =>
+        countMatched(wordsWhere(cond),
+          if (maxEdits == 1) Some(cond) else None)
     }
 
   /** Regex term search (engine extension): docs containing any dictionary
@@ -1119,9 +1129,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     try { java.util.regex.Pattern.compile(pattern) }
     catch { case _: java.util.regex.PatternSyntaxException =>
       return emptyResult("cnt") }
-    val matched = dict.filter($"term".rlike(pattern))
-      .select(lit(0).as("term_idx"), $"term".as("word"), $"df")
-    countMatched(matched, None)
+    countMatched(wordsWhere($"term".rlike(pattern)), None)
   }
 
   /** Prefix autocomplete over the dictionary (engine extension): top-k
@@ -1167,8 +1175,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     if (k < 1) return empty
     fuzzyMatched(word, maxEdits = 1) match {
       case None => empty
-      case Some((matched, _)) =>
-        matched.filter($"word" =!= word)
+      case Some(cond) =>
+        wordsWhere(cond).filter($"word" =!= word)
           .select($"word".as("term"), $"df")
           .orderBy($"df".desc, $"term").limit(k)
     }
@@ -1176,13 +1184,13 @@ final class Searcher(spark: SparkSession, store: IndexStore,
 
   /** BM25-scored fuzzy search: every matched dictionary word scores as an
     * independent OR'd term (weight = idf — the [[searchBm25]] pure-OR
-    * shape), evaluated by the same distributed block-max WAND. */
+    * shape), evaluated by the same distributed block-max WAND over the
+    * postings filtered by the match condition. */
   def searchFuzzyBm25(word: String, k: Int, maxEdits: Int = 1): DataFrame =
     fuzzyMatched(word, maxEdits) match {
       case None => emptyResult("score")
-      case Some((matched, coarse)) =>
-        wandTopK(coarse.map(postings.filter).getOrElse(postings),
-          matched.select($"word", bm25Idf($"df").as("weight")), k)
+      case Some(cond) =>
+        wandTopK(postings.filter(cond).withColumn("mult", lit(1)), k)
     }
 
   private def rankedCounts(hits: Option[DataFrame]): DataFrame = hits match {
@@ -1260,7 +1268,8 @@ final class Searcher(spark: SparkSession, store: IndexStore,
       // (searchFuzzyBm25's; the gate query keeps the neighborhood
       // single-match so the oracle is bit-exact)
       case Fuzzy(w) =>
-        fuzzyMatched(w, maxEdits = 1).map((matchedFrame _).tupled)
+        fuzzyMatched(w, maxEdits = 1)
+          .map(c => matchedFrame(wordsWhere(c), Some(c)))
       case Word(w, quoted) =>
         val terms = Seq((w, quoted || conf.exactMatch))
         Some(matchedFrame(matchedWords(terms), coarsePred(terms)))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.Row
 import graft.fixtures.TranscriptGen
 import graft.index.{Codec, Compactor, IndexBuilder, IndexDeleter, IndexMerger, IndexStore}
 import graft.model.{DocKey, EngineConf, Turn}
-import graft.search.Searcher
+import graft.search.{Fuzzy, Searcher}
+import graft.verify.Oracle
 
 /** Document deletion (LSM tombstones): masked hits before compaction with
   * the Lucene stale-stats contract, resurrection on re-index, and the
@@ -94,6 +95,99 @@ class DeleteSpec extends SparkTestBase {
       assert(bm25Map(sDel, q, wand = false) ==
         live(bm25Map(sFull, q, wand = false)), s"DF query: $q")
     }
+  }
+
+  private def ranked(df: org.apache.spark.sql.DataFrame)
+      : Seq[(DocKey, Double)] =
+    df.collect().map { case Row(c: String, t: Int, v: Double) =>
+      DocKey(c, t) -> v }.toSeq
+
+  /** `got` ranks like the oracle's `live` ranking (tombstoned docs already
+    * removed): the same docs at every rank, scores within 1e-9. */
+  private def assertRanksLike(got: Seq[(DocKey, Double)],
+      live: Seq[(DocKey, Double)], k: Int, what: String): Unit = {
+    val exp = live.take(k)
+    assert(got.map(_._1) == exp.map(_._1), s"$what: ranking")
+    got.zip(exp).foreach { case ((_, gs), (_, es)) =>
+      assert(math.abs(gs - es) <= 1e-9 * math.max(1.0, math.abs(es)),
+        s"$what: score $gs vs $es")
+    }
+  }
+
+  test("a large tombstone set: WAND and fuzzy WAND rank like the oracle minus deletions") {
+    import spark.implicits._
+    // every other conversation tombstoned — half the corpus
+    val gone = (0 until NConvs by 2).map(i => TranscriptGen.convId(i.toLong))
+    val dir = buildIndex()
+    assert(IndexDeleter.delete(spark, dir,
+      spark.createDataset(gone).select($"value".as("conv_id")))._2 > 0)
+    val oracle = new Oracle(conf).indexAll(full)
+    val goneSet = gone.toSet
+    def live(exp: Seq[(DocKey, Double)]) =
+      exp.filterNot { case (d, _) => goneSet.contains(d.conv_id) }
+    val s = new Searcher(spark, new IndexStore(dir), conf)
+    for (q <- Seq("which", "which would there", "\"people\" OR peopl",
+        TranscriptGen.UniqueWord); k <- Seq(5, 1000)) {
+      assertRanksLike(ranked(s.searchBm25(q, k)),
+        live(oracle.searchBm25(q, full.size)), k, s"bm25 $q k=$k")
+    }
+    // fuzzy: every dictionary word within the edit bound, as exact OR'd
+    // terms of the oracle
+    def lev(a: String, b: String): Int = {
+      val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
+        if (i == 0) j else if (j == 0) i else 0 }
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
+          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      d(a.length)(b.length)
+    }
+    for ((w, edits) <- Seq(("whicj", 1), ("woukd", 1), ("wuold", 2))) {
+      val words =
+        if (edits == 1) Fuzzy.neighborhood1(w).filter(oracle.postings.contains)
+        else oracle.postings.keys.filter(lev(_, w) <= edits).toSeq.sorted
+      assert(words.nonEmpty, w)
+      val exp = live(oracle.searchBm25(
+        words.map(x => "\"" + x + "\"").mkString(" OR "), full.size))
+      for (k <- Seq(5, 1000))
+        assertRanksLike(ranked(s.searchFuzzyBm25(w, k, edits)), exp, k,
+          s"fuzzy $w~$edits k=$k")
+    }
+    s.close()
+  }
+
+  test("layered, regrouped, tombstoned index: WAND weights from part df rank like the oracle") {
+    import spark.implicits._
+    // three layers: the base, then two merges that re-issue conversations
+    // (turn-0 rewrites + appended turns: old-wins regroups masked through
+    // replaced_terms, stacked by the second re-issue) and add fresh ones,
+    // so a term's df is spread over parts of several layers
+    val b2 = TranscriptGen.batch2(NConvs.toLong, 8, 6)
+    val b3 = TranscriptGen.batch2(NConvs + 8L, 5, 3)
+    val dir = buildIndex()
+    IndexMerger.merge(spark, spark.createDataset(b2).repartition(2), dir, conf)
+    IndexMerger.merge(spark, spark.createDataset(b3).repartition(2), dir, conf)
+    deleteKeys(dir)
+    val store = new IndexStore(dir)
+    val layers = store.layers(store.currentVersion.get)
+    assert(layers.count(_.replaced.nonEmpty) == 2, layers)
+    // fixture: some term has parts in two layers, and a regrouped one too
+    val termLayers = layers.take(3).map(l =>
+      spark.read.parquet(s"$dir/${l.postings}").select($"term").distinct()
+        .as[String].collect().toSet)
+    assert(termLayers(0).intersect(termLayers(1)).contains("which"))
+    assert(termLayers(1).contains("therefore") &&
+      termLayers(2).contains("therefore"))
+    val oracle = new Oracle(conf).indexAll(full ++ b2 ++ b3)
+    val s = new Searcher(spark, store, conf)
+    // a word OR'd with its own prefix scores it twice (mult = 2)
+    for (q <- Seq("which", "which would there", "(therefore OR there)",
+        "sparkle rewritten", "\"people\" OR peopl", "which OR which");
+        k <- Seq(10, 1000)) {
+      val live = oracle.searchBm25(q, Int.MaxValue)
+        .filterNot { case (d, _) => isDeleted(d) }
+      assertRanksLike(ranked(s.searchBm25(q, k)), live, k, s"$q k=$k")
+    }
+    s.close()
   }
 
   test("stats stay as-of the snapshot until compaction (Lucene contract)") {

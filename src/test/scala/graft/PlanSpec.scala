@@ -52,9 +52,24 @@ class PlanSpec extends SparkTestBase {
     assert(plan.contains("StringStartsWith(term,which)"), plan)
     assert(plan.contains("StringStartsWith(term,would)"), plan)
     assert(plan.contains("letter"), plan)
-    // and the word weights arrive via a broadcast join, not an In-list
+    // and the matched words are the filtered scan itself, not an In-list
     assert(!plan.contains("term#") || !plan.contains(" IN ("),
       "dispatch must not be an In-list")
+    searcher.close()
+  }
+
+  test("WAND plan: no dictionary read, one shuffle (the shard exchange), pushed predicates") {
+    val searcher = new Searcher(spark, new IndexStore(indexDir), conf)
+    val plan = formatted(searcher.searchBm25("which would", 10))
+    // term weights come from the parts' own df: no dict table is scanned
+    assert(!plan.contains("/dict"), plan)
+    assert(plan.contains("/postings"), plan)
+    // the only hash shuffle is the shard routing; the weights no longer
+    // need a matched-words aggregate
+    assert("Arguments: hashpartitioning\\(".r.findAllIn(plan).length == 1, plan)
+    assert(plan.contains("StringStartsWith(term,which)"), plan)
+    assert(plan.contains("StringStartsWith(term,would)"), plan)
+    assert("PartitionFilters: \\[[^\\]]*letter".r.findAllIn(plan).nonEmpty, plan)
     searcher.close()
   }
 

@@ -80,12 +80,13 @@ final class Searcher(spark: SparkSession, store: IndexStore,
   private lazy val deletedIds: Option[DataFrame] =
     store.deletedIdsAt(spark, version)
 
-  private lazy val docs: DataFrame = {
-    val base = store.docsAt(spark, version)
-    deletedIds match {
-      case None => base
-      case Some(del) => base.join(broadcast(del), Seq("doc_id"), "left_anti")
-    }
+  // the unmasked doc table, read once per Searcher (a parquet read infers
+  // its schema with a Spark job): keyset cursors resolve against it
+  private lazy val allDocs: DataFrame = store.docsAt(spark, version)
+
+  private lazy val docs: DataFrame = deletedIds match {
+    case None => allDocs
+    case Some(del) => allDocs.join(broadcast(del), Seq("doc_id"), "left_anti")
   }
 
   /** Drop tombstoned docs from a (doc_id, …) hit frame BEFORE any top-k
@@ -470,24 +471,29 @@ final class Searcher(spark: SparkSession, store: IndexStore,
 
   /** BM25 search over the same boolean structure (north-star scoring).
     *
-    * Pure-OR queries (the common top-k case) run distributed block-max WAND
-    * over the compressed parts ([[Wand]]); boolean-structured queries fall
-    * back to the DataFrame algebra with BM25 contributions. WAND scores
-    * each search word once, while the reference fold adds a word once per
-    * reference, so a query that names a word twice (`which OR which`) or
-    * never (an unquoted word under exactMatch) takes the algebra too. */
+    * [[wandEligible]] queries (the common top-k case) run distributed
+    * block-max WAND over the compressed parts ([[Wand]]); boolean-structured
+    * queries fall back to the DataFrame algebra with BM25 contributions. */
   def searchBm25(query: String, k: Int, useWand: Boolean = true): DataFrame = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid) return emptyResult("score")
+    if (useWand && wandEligible(parsed)) searchBm25Wand(parsed, k)
+    else searchBm25Df(parsed, k)
+  }
+
+  /** Whether WAND ranks a query exactly: pure-OR, with every search word
+    * referenced exactly once. WAND scores each search word once, while the
+    * reference fold adds a word once per reference, so a query that names
+    * a word twice (`which OR which`) or never (an unquoted word under
+    * exactMatch) takes the algebra. */
+  private def wandEligible(parsed: QueryParser.Parsed): Boolean = {
     val pureOr = parsed.items.forall {
       case QueryParser.OpItem(op) => op == QueryParser.OR
       case _ => true
     }
     val refs = parsed.items.collect { case QueryParser.TermRef(i) => i }
-    if (useWand && pureOr && parsed.searchWords.nonEmpty &&
-        refs.sorted == parsed.searchWords.indices)
-      return searchBm25Wand(parsed, k)
-    searchBm25Df(parsed, k)
+    pureOr && parsed.searchWords.nonEmpty &&
+      refs.sorted == parsed.searchWords.indices
   }
 
   /** WAND path: the postings scan, filtered by the query's match
@@ -495,15 +501,18 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * equals/startsWith push to parquet min/max file skipping), IS the
     * matched-word set — no dictionary read. A part's `mult` is the number
     * of conditions its term meets: a word matched by two search terms
-    * contributes twice, like two OR'd per-term passes. */
-  private def searchBm25Wand(parsed: QueryParser.Parsed, k: Int): DataFrame = {
+    * contributes twice, like two OR'd per-term passes. `after` is a keyset
+    * cursor frame (`a_id`, at most one row; see [[Wand.topK]]). */
+  private def searchBm25Wand(parsed: QueryParser.Parsed, k: Int,
+      after: Option[DataFrame] = None): DataFrame = {
     val conds = matchConds(parsed.searchWords)
     coarseOf(conds) match {
       case None => emptyResult("score")
       case Some(coarse) =>
         val mult = conds.map { case (_, c) => when(c, 1).otherwise(0) }
           .reduce(_ + _)
-        wandTopK(postings.filter(coarse).withColumn("mult", mult), k)
+        wandTopK(postings.filter(coarse).withColumn("mult", mult), k,
+          after = after)
     }
   }
 
@@ -513,9 +522,11 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * `drop` removes matching docs after WAND: WAND then ranks k + 1, since
     * the one dropped doc (a seed) may hold a slot. */
   private def wandTopK(parts: DataFrame, k: Int,
-      drop: Option[Column] = None): DataFrame = {
+      drop: Option[Column] = None,
+      after: Option[DataFrame] = None): DataFrame = {
     val top = Wand.topK(spark, parts, meta.maxDocId + 1, meta.numDocs,
-      meta.avgdl, conf, if (drop.isEmpty) k else k + 1, deletedBroadcast)
+      meta.avgdl, conf, if (drop.isEmpty) k else k + 1, deletedBroadcast,
+      after)
     // the top-k side is k rows — broadcast it so resolving doc keys is a
     // map-side lookup over the docs scan, not a sort-merge join
     val resolved = broadcast(top).join(docs, Seq("doc_id"))
@@ -526,7 +537,7 @@ final class Searcher(spark: SparkSession, store: IndexStore,
 
   /** The (term_idx, doc_id, v) BM25 per-term frame — ONE definition for
     * the single-query DataFrame-algebra scoring paths ([[searchBm25Df]],
-    * [[searchBm25Page]], [[searchBm25Where]]), so the per-term
+    * boolean [[searchBm25Page]], [[searchBm25Where]]), so the per-term
     * shape cannot drift between them (the same reason [[bm25Idf]]/
     * [[bm25TfNorm]] are centralized). */
   private def bm25PerTerm(searchWords: Seq[(String, Boolean)]): DataFrame =
@@ -554,44 +565,43 @@ final class Searcher(spark: SparkSession, store: IndexStore,
     * page passes the previous page's LAST doc key — the page is the next k
     * results STRICTLY after that cursor in the ranking's total order
     * (score desc, doc key asc). Unlike an OFFSET, a page never
-    * materializes or ranks the rows before the cursor: the cursor becomes
-    * a filter on the scored frame, so page depth costs nothing extra —
-    * every page is one scoring pass + its own top-k.
+    * materializes or ranks the rows before the cursor: every page is one
+    * scoring pass with the cursor as a floor, plus its own top-k.
     *
-    * The cursor is the doc KEY only; the cursor doc's score re-derives
-    * from this query's own scored frame INSIDE the page's single action (a
-    * broadcast-join chain, no driver collect — the method stays lazy like
-    * every other Searcher API), so the walk is bit-stable by construction:
-    * the cursor comparison and the page read the same scoring plan, the
-    * caller never round-trips a floating-point score, and pages cannot
-    * shift even though the WAND top-k path may differ from the
-    * DataFrame-algebra path by 1 ULP (the summation-order artifact this
-    * API exists to be immune to: all pages of a walk score through the
-    * SAME algebra path; WAND stays the one-shot top-k engine). A cursor
-    * key absent from the index or the hit set returns empty (the
+    * [[wandEligible]] queries page on WAND: page 1 IS [[searchBm25]]'s
+    * plan, and a later page is the same WAND pass with the cursor as a
+    * floor inside each shard ([[Wand.topK]]), which re-scores the cursor
+    * doc with the arithmetic that ranked it. Boolean-shaped queries page on
+    * the DataFrame algebra, the cursor's score riding a one-row broadcast
+    * off the same scored frame. Either way the cursor is the doc KEY only
+    * and resolves inside the page's own action (no driver collect — the
+    * method stays lazy like every other Searcher API): a walk equals the
+    * one-shot ranking of its path row for row, and the caller never
+    * round-trips a floating-point score.
+    *
+    * The key resolves against the UNMASKED doc table (doc_id is assigned
+    * in (conv_id, turn_idx) order, so it is a pushed-equality lookup of ≤ 1
+    * row): a boundary doc tombstoned mid-walk still resolves and scores, so
+    * the walk continues with results still masked (a compaction PURGE
+    * removes the doc's postings, so the cursor then reads as absent). A
+    * cursor key absent from the index or the hit set returns empty (the
     * malformed-input tolerance). */
   def searchBm25Page(query: String, k: Int,
       after: Option[(String, Int)] = None): DataFrame = {
     val parsed = QueryParser.parse("(" + query + ")", conf.exactMatch)
     if (!parsed.valid || k < 1) return emptyResult("score")
+    val cursorId = after.map { case (aConv, aTurn) =>
+      allDocs.filter($"conv_id" === aConv && $"turn_idx" === aTurn)
+        .select($"doc_id".as("a_id"))
+    }
+    if (wandEligible(parsed)) return searchBm25Wand(parsed, k, cursorId)
     val scored = hitsOf(parsed, bm25PerTerm(parsed.searchWords))
-    val pageBase = after match {
+    val pageBase = cursorId match {
       case None => scored
-      case Some((aConv, aTurn)) =>
-        // doc_id is assigned in (conv_id, turn_idx) order, so the internal
-        // tie-break key resolves from the caller-visible cursor by a
-        // pushed-equality docs lookup (≤ 1 row, broadcast) — against the
-        // UNMASKED doc table: a boundary doc tombstoned mid-walk must
-        // still resolve so the walk continues (results stay masked by
-        // rankTopK; a compaction PURGE removes the doc's postings, so the
-        // cursor then reads as absent — the documented empty). The
-        // cursor's own score rides a second one-row broadcast off the
-        // SAME scored frame — an absent key or non-hit cursor makes the
-        // inner join empty, which is exactly the documented empty result
-        val cursorId = store.docsAt(spark, version)
-          .filter($"conv_id" === aConv && $"turn_idx" === aTurn)
-          .select($"doc_id".as("a_id"))
-        val cursor = scored.join(broadcast(cursorId),
+      case Some(id) =>
+        // an absent key or non-hit cursor makes the inner join empty,
+        // which is exactly the documented empty result
+        val cursor = scored.join(broadcast(id),
             $"doc_id" === $"a_id")
           .select($"v".as("a_v"), $"a_id")
         scored.join(broadcast(cursor),

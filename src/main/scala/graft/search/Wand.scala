@@ -4,12 +4,14 @@ import scala.collection.mutable
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, lit}
 
 import graft.index.Codec
 import graft.model.EngineConf
 
 /** Distributed block-max WAND (Ding & Suel BMW) top-k over the compressed
-  * posting parts — the north star's query path.
+  * posting parts — the north star's query path, for one-shot top-k and for
+  * every page of a keyset walk.
   *
   * Input: the matched posting parts themselves (term, mult, df, first_doc,
   * last_doc, bytes) — the caller filters the postings scan to the query's
@@ -25,11 +27,24 @@ import graft.model.EngineConf
   * of each term, sums df per term (Σ part df = dictionary df, IndexCheck's
   * `dict_df_vs_parts_df`) and sets weight = idf(df) × mult — the same
   * operations, in the same order, as the DataFrame paths' BM25 idf, so
-  * scores are bit-identical to them. Each shard runs BMW locally with the
-  * per-block (maxTf, minDl) directory bounds — which stay valid upper
-  * bounds across merges for any avgdl — and emits its local top-k; the
-  * global top-k is the built-in TakeOrderedAndProject over shard
-  * candidates.
+  * weights are bit-identical to theirs. A doc's score sums its words'
+  * contributions in word order; the DataFrame algebra sums in its own
+  * order, so scores of three or more words can differ from it by 1 ULP.
+  * Each shard runs BMW locally with the per-block (maxTf, minDl) directory
+  * bounds — which stay valid upper bounds across merges for any avgdl —
+  * and emits its local top-k; the global top-k is the built-in
+  * TakeOrderedAndProject over shard candidates.
+  *
+  * Keyset floor (a page after a cursor doc `a_id`): the cursor arrives as
+  * a one-row frame joined into every part, and the parts whose doc range
+  * covers `a_id` go with their bytes to EVERY shard. Each shard then scores
+  * `a_id` itself ([[cursorScore]]) with the arithmetic its pivot sum uses,
+  * so the floor `a_v` is bit-identical to the score the cursor doc got on
+  * the previous page, and offers only docs strictly after the cursor in
+  * the (score desc, doc id) order. theta comes only from docs past the
+  * floor, so the bounds stay valid and pruning stays exact. An absent
+  * cursor key empties the join and so the page; a cursor doc with no
+  * posting of the query's words makes every shard emit nothing.
   *
   * Scoring is BM25: weight × tf(k1+1) / (tf + k1(1-b+b·dl/avgdl)).
   */
@@ -39,9 +54,11 @@ object Wand {
       first_doc: Long, bytes: Array[Byte])
   final case class Cand(doc_id: Long, score: Double)
   /** One part as routed to one shard; `bytes` is null where the part's
-    * doc range misses the shard (the row then carries only its df). */
+    * doc range misses the shard and the cursor doc `after` (the row then
+    * carries only its df). */
   final case class Routed(shard: Int, term: String, mult: Int, df: Long,
-      first_doc: Long, bytes: Array[Byte])
+      first_doc: Long, last_doc: Long, after: Option[Long],
+      bytes: Array[Byte])
 
   /** Top-k over the matched posting `parts` (pass them PRE-FILTERED with
     * the query's coarse predicate — letter equality for partition pruning
@@ -52,10 +69,15 @@ object Wand {
     * `exclude`: SORTED tombstoned doc ids skipped during scoring (the
     * Lucene live-docs check — candidates are dropped at offer time, so
     * upper bounds stay valid and live docs can never be displaced by a
-    * deleted one), shipped to executors once as a broadcast. */
+    * deleted one), shipped to executors once as a broadcast.
+    *
+    * `after`: the keyset cursor, a frame of at most one `a_id` row — the
+    * result is then the top-k strictly after that doc in the (score desc,
+    * doc id) order. */
   def topK(spark: SparkSession, parts: DataFrame, span: Long, numDocs: Long,
       avgdl: Double, conf: EngineConf, k: Int,
-      exclude: Broadcast[Array[Long]]): DataFrame = {
+      exclude: Broadcast[Array[Long]],
+      after: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     if (span <= 0)
       return spark.emptyDataset[Cand].toDF()
@@ -64,13 +86,22 @@ object Wand {
     val k1 = conf.k1; val b = conf.b
     val n = numDocs.toDouble
 
-    val routed = parts
-      .select($"term", $"mult", $"df", $"first_doc", $"last_doc", $"bytes")
-      .as[(String, Int, Long, Long, Long, Array[Byte])]
-      .flatMap { case (term, mult, df, fd, ld, bytes) =>
+    val cols = Seq($"term", $"mult", $"df", $"first_doc", $"last_doc",
+      $"bytes")
+    val withCursor = after match {
+      case None => parts.select(cols :+ lit(null).cast("long").as("a_id"): _*)
+      case Some(a) => parts.crossJoin(broadcast(a.select($"a_id")))
+        .select(cols :+ $"a_id": _*)
+    }
+    val routed = withCursor
+      .as[(String, Int, Long, Long, Long, Array[Byte], Option[Long])]
+      .flatMap { case (term, mult, df, fd, ld, bytes, aId) =>
         val (s0, s1) = ((fd / width).toInt, (ld / width).toInt)
-        (0 until numShards).iterator.map(s =>
-          Routed(s, term, mult, df, fd, if (s >= s0 && s <= s1) bytes else null))
+        // a part holding the cursor doc goes whole to every shard, so each
+        // shard can score the cursor itself
+        val covers = aId.exists(a => fd <= a && a <= ld)
+        (0 until numShards).iterator.map(s => Routed(s, term, mult, df, fd,
+          ld, aId, if (covers || (s >= s0 && s <= s1)) bytes else null))
       }
 
     val cands = routed.groupByKey(_.shard).flatMapGroups { (shard, rows) =>
@@ -78,18 +109,30 @@ object Wand {
       val hi = math.min(lo + width, span)
       val dfs = mutable.HashMap.empty[String, Long]
       val scored = mutable.ArrayBuffer.empty[Routed]
+      var aId = Option.empty[Long]
       rows.foreach { r =>
         dfs(r.term) = dfs.getOrElse(r.term, 0L) + r.df
         if (r.bytes != null) scored += r
+        aId = r.after
       }
       // the BM25 idf of the summed df, as Spark's log evaluates it
       def weight(r: Routed): Double = {
         val df = dfs(r.term)
         StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5)) * r.mult
       }
-      runShard(scored.iterator.map(r =>
-          ShardRow(shard, r.term, weight(r), r.first_doc, r.bytes)),
-        lo, hi, k1, b, avgdl, k, exclude.value)
+      def shardRows(rs: Iterable[Routed]): Iterator[ShardRow] =
+        rs.iterator.map(r =>
+          ShardRow(shard, r.term, weight(r), r.first_doc, r.bytes))
+      def top(floor: Option[(Double, Long)]): Iterator[Cand] = runShard(
+        shardRows(scored), lo, hi, k1, b, avgdl, k, exclude.value, floor)
+      aId match {
+        case None => top(None)
+        case Some(a) => cursorScore(shardRows(scored.filter(r =>
+            r.first_doc <= a && a <= r.last_doc)), a, k1, b, avgdl) match {
+          case None => Iterator.empty // a non-hit cursor: no page
+          case Some(v) => top(Some((v, a)))
+        }
+      }
     }
 
     cands.toDF().orderBy($"score".desc, $"doc_id").limit(k)
@@ -193,21 +236,46 @@ object Wand {
     def init(): this.type = { advanceTo(lo); this }
   }
 
-  private[graft] def runShard(rows: Iterator[ShardRow], lo: Long, hi: Long,
-      k1: Double, b: Double, avgdl: Double, k: Int,
-      exclude: Array[Long] = Array.emptyLongArray): Iterator[Cand] = {
-    @inline def isDeleted(d: Long): Boolean =
-      exclude.length > 0 && java.util.Arrays.binarySearch(exclude, d) >= 0
-    // cursors: one per word, chaining its parts in doc order
+  /** Cursors over `rows` in [lo, hi): one per word, in word order,
+    * chaining the word's parts in doc order; exhausted ones dropped. */
+  private def cursorsOf(rows: Iterator[ShardRow], lo: Long, hi: Long,
+      k1: Double, b: Double, avgdl: Double): mutable.ArrayBuffer[Cursor] = {
     val byWord = mutable.LinkedHashMap.empty[String, (Double, mutable.ArrayBuffer[(Long, Array[Byte])])]
     rows.foreach { r =>
       val e = byWord.getOrElseUpdate(r.word, (r.weight, mutable.ArrayBuffer.empty))
       e._2 += ((r.first_doc, r.bytes))
     }
-    val cursors = byWord.toSeq.sortBy(_._1).map { case (w, (weight, ps)) =>
+    byWord.toSeq.sortBy(_._1).map { case (w, (weight, ps)) =>
       new Cursor(w, weight, ps.sortBy(_._1).map(p => Codec.decode(p._2)).toArray,
         lo, hi, k1, b, avgdl).init()
     }.filterNot(_.exhausted).to(mutable.ArrayBuffer)
+  }
+
+  /** The score [[runShard]] gives doc `aId` (pass at least the parts whose
+    * range covers it): the cursors sitting at `aId`, summed in word order
+    * from 0.0 as a pivot is summed. None when no word has a posting there. */
+  private[graft] def cursorScore(rows: Iterator[ShardRow], aId: Long,
+      k1: Double, b: Double, avgdl: Double): Option[Double] = {
+    val at = cursorsOf(rows, aId, aId + 1, k1, b, avgdl)
+    if (at.isEmpty) None
+    else {
+      var s = 0.0
+      at.foreach { c => s += c.score }
+      Some(s)
+    }
+  }
+
+  /** Local top-k of one shard over [lo, hi). `floor` = (a_v, a_id) keeps
+    * only docs strictly after the cursor: score < a_v, or = a_v with a
+    * larger doc id. */
+  private[graft] def runShard(rows: Iterator[ShardRow], lo: Long, hi: Long,
+      k1: Double, b: Double, avgdl: Double, k: Int,
+      exclude: Array[Long] = Array.emptyLongArray,
+      floor: Option[(Double, Long)] = None): Iterator[Cand] = {
+    @inline def isDeleted(d: Long): Boolean =
+      exclude.length > 0 && java.util.Arrays.binarySearch(exclude, d) >= 0
+    val (fv, fa) = floor.getOrElse((Double.PositiveInfinity, Long.MinValue))
+    val cursors = cursorsOf(rows, lo, hi, k1, b, avgdl)
     if (cursors.isEmpty) return Iterator.empty
 
     // head = worst candidate: smallest score, ties broken by larger doc id
@@ -219,8 +287,10 @@ object Wand {
         val w = heap.head
         s > w.score || (s == w.score && d < w.doc_id)
       }
+    // theta only ever holds docs past the floor, so every bound below
+    // stays a valid bound on what could still enter the heap
     def offer(s: Double, d: Long): Unit =
-      if (beatsWorst(s, d)) {
+      if ((s < fv || (s == fv && d > fa)) && beatsWorst(s, d)) {
         if (heapFull) heap.dequeue()
         heap.enqueue(Cand(d, s))
       }

@@ -8,11 +8,14 @@ import graft.model.EngineConf
 import graft.search.Searcher
 
 /** Keyset pagination (search_after): walking the BM25 ranking page by page
-  * must reproduce the full ranking exactly — across tie groups, page sizes,
-  * and both boolean shapes — and a stale/unknown cursor degrades to empty.
-  * The cursor is the doc KEY only (scores re-derive internally), so the
-  * walk is bit-stable even though WAND and the DataFrame algebra can
-  * differ by 1 ULP. */
+  * must reproduce the one-shot ranking exactly — across tie groups, page
+  * sizes, layers, tombstones and both query shapes — and a stale/unknown
+  * cursor degrades to empty. Pure-OR queries page on WAND and are checked
+  * against `searchBm25(q, n)`; boolean queries page on the DataFrame
+  * algebra and are checked against `searchBm25(q, n, useWand = false)`.
+  * The cursor is the doc KEY only (each page re-scores it with its own
+  * path's arithmetic), so walks stay bit-exact with `===` even though the
+  * two paths can differ by 1 ULP. */
 class PaginationSpec extends SparkTestBase {
 
   private val conf = EngineConf.default.copy(maxPostingsPerPart = 64,
@@ -33,21 +36,35 @@ class PaginationSpec extends SparkTestBase {
       case Row(c: String, t: Int, s: Double) => (c, t, s)
     }
 
-  private def pageWalk(query: String, k: Int): Seq[(String, Int, Double)] = {
+  /** Up to `maxPages` pages of `k` (all pages by default), each after the
+    * previous page's last key. */
+  private def pageWalk(query: String, k: Int, s: Searcher = searcher,
+      maxPages: Int = Int.MaxValue): Seq[(String, Int, Double)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Double)]
-    var page = rows(searcher.searchBm25Page(query, k))
-    while (page.nonEmpty) {
+    var page = rows(s.searchBm25Page(query, k))
+    var n = 0
+    while (page.nonEmpty && n < maxPages) {
+      // a page that repeats a row would walk forever
+      assert(!out.contains(page.last), s"page ${n + 1} repeats ${page.last}")
       out ++= page
+      n += 1
       val (c, t, _) = page.last
-      page = rows(searcher.searchBm25Page(query, k, Some((c, t))))
+      if (n < maxPages) page = rows(s.searchBm25Page(query, k, Some((c, t))))
     }
     out.toSeq
   }
 
+  /** The one-shot ranking a walk must equal: WAND for pure-OR queries,
+    * the DataFrame algebra for boolean ones. */
+  private def ranking(s: Searcher, q: String, n: Int,
+      boolean: Boolean = false): Seq[(String, Int, Double)] =
+    rows(s.searchBm25(q, n, useWand = !boolean))
+
   test("page walk reproduces the full ranking exactly (ties included)") {
-    for (q <- Seq("which would there", "(which AND would)"); k <- Seq(7, 50)) {
-      // the full ranking in one shot through the same algebra path
-      val full = rows(searcher.searchBm25(q, 100000, useWand = false))
+    for ((q, boolean) <- Seq("which would there" -> false,
+        "(which AND would)" -> true); k <- Seq(7, 50)) {
+      // the full ranking in one shot through the same path
+      val full = ranking(searcher, q, 100000, boolean)
       assert(full.size > 7, s"fixture too small for $q") // k=7 multi-pages
       assert(pageWalk(q, k) === full, s"q=$q k=$k")
     }
@@ -61,17 +78,17 @@ class PaginationSpec extends SparkTestBase {
     assert(p2.nonEmpty)
     assert(p1.map(r => (r._1, r._2)).toSet
       .intersect(p2.map(r => (r._1, r._2)).toSet).isEmpty)
-    // the ranking's order holds across the page boundary (tolerance: the
-    // two paths may disagree by 1 ULP on the cursor doc itself)
-    assert(p2.head._3 <= p1.last._3 + 1e-9)
+    // the ranking's order holds across the page boundary
+    assert(p2.head._3 <= p1.last._3)
   }
 
   test("seeded fuzz: page walks reproduce full rankings at random k") {
     val rnd = new scala.util.Random(0x9A6E5)
-    val queries = Seq("which would", """("there" OR "search")""",
-      "(whichever AND would)", "assistant message which")
-    for (q <- queries) {
-      val full = rows(searcher.searchBm25(q, 100000, useWand = false))
+    val queries = Seq("which would" -> false,
+      """("there" OR "search")""" -> false,
+      "(whichever AND would)" -> true, "assistant message which" -> false)
+    for ((q, boolean) <- queries) {
+      val full = ranking(searcher, q, 100000, boolean)
       val k = 1 + rnd.nextInt(math.max(1, full.size)) // 1..|hits|
       assert(pageWalk(q, k) === full, s"q=$q k=$k")
     }
@@ -85,7 +102,7 @@ class PaginationSpec extends SparkTestBase {
       TranscriptGen.dataset(spark, 40, partitions = 4), dir, conf)
     val clean = new Searcher(spark, new IndexStore(dir), conf)
     val q = "which would there"
-    val full = rows(clean.searchBm25(q, 100000, useWand = false))
+    val full = ranking(clean, q, 100000)
     val p1 = rows(clean.searchBm25Page(q, 10))
     val (bc, bt, _) = p1.last
     clean.close()
@@ -112,5 +129,60 @@ class PaginationSpec extends SparkTestBase {
       Some((TranscriptGen.convId(0L), 0))).collect().isEmpty)
     assert(searcher.searchBm25Page("((((broken", 10,
       Some((TranscriptGen.convId(0L), 0))).collect().isEmpty)
+  }
+
+  test("WAND walks equal one ranking: layers, a cut tie group, a tombstoned cursor, absent and non-hit cursors") {
+    import spark.implicits._
+    // identical turns in different conversations score identically, in
+    // both layers; one conversation names none of the query's words
+    def turns(convs: Seq[String], text: String) = convs.map(c =>
+      graft.model.Turn(c, 0, "user", text, null,
+        new java.sql.Timestamp(0L)))
+    val same = "which would there happen"
+    val dir = tmpDir("graft-page-wand")
+    IndexBuilder.build(spark,
+      TranscriptGen.dataset(spark, 40, partitions = 4)
+        .union(spark.createDataset(
+          turns((0 until 5).map(i => s"tie-00$i"), same) ++
+            turns(Seq("nohit-000"), "alpha bravo charlie delta"))),
+      dir, conf)
+    graft.index.IndexMerger.merge(spark,
+      TranscriptGen.batch2Dataset(spark, 40, extra = 10, overlap = 3)
+        .union(spark.createDataset(
+          turns((5 until 8).map(i => s"tie-00$i"), same))),
+      dir, conf)
+    val store = new IndexStore(dir)
+    assert(store.layers(store.currentVersion.get).length == 2)
+    val before = new Searcher(spark, store, conf)
+    val q = "which would there"
+    val full = ranking(before, q, 100000)
+    // k cuts the tie group after its third member
+    val k = full.indexWhere(_._1.startsWith("tie-")) + 3
+    assert(full(k - 1)._1.startsWith("tie-") && full(k)._1.startsWith("tie-"))
+    assert(full(k - 1)._3 == full(k)._3)
+    for (n <- Seq(1, 4))
+      assert(pageWalk(q, k, before, n) === ranking(before, q, n * k),
+        s"n=$n k=$k")
+    // absent and non-hit cursors degrade to the empty page
+    assert(rows(before.searchBm25Page(q, k, Some(("no-such-conv", 0))))
+      .isEmpty)
+    assert(rows(before.searchBm25Page(q, k, Some(("nohit-000", 0)))).isEmpty)
+    // the cursor (a tie-group member) is tombstoned mid-walk: the walk
+    // continues from its unmasked key, and survivors keep their scores
+    val p1 = rows(before.searchBm25Page(q, k))
+    val (bc, bt, _) = p1.last
+    before.close()
+    graft.index.IndexDeleter.delete(spark, dir, Seq(bc).toDF("conv_id"))
+    val after = new Searcher(spark, new IndexStore(dir), conf)
+    val rest = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Double)]
+    var cursor = (bc, bt)
+    for (_ <- 0 until 3) {
+      val page = rows(after.searchBm25Page(q, k, Some(cursor)))
+      rest ++= page
+      if (page.nonEmpty) cursor = (page.last._1, page.last._2)
+    }
+    assert(rest.nonEmpty)
+    assert(rest.toSeq === full.drop(k).filter(_._1 != bc).take(3 * k))
+    after.close()
   }
 }

@@ -73,6 +73,21 @@ class PlanSpec extends SparkTestBase {
     searcher.close()
   }
 
+  test("WAND page-2 plan: the cursor floor joins the shard pass — no dictionary, one shuffle") {
+    val searcher = new Searcher(spark, new IndexStore(indexDir), conf)
+    val plan = formatted(searcher.searchBm25Page("which would", 10,
+      Some((TranscriptGen.convId(0L), 0))))
+    // the cursor's score comes from the shard pass itself: no dict scan
+    // and no second scoring plan for the cursor
+    assert(!plan.contains("/dict"), plan)
+    assert(plan.contains("/docs"), plan)
+    assert("Arguments: hashpartitioning\\(".r.findAllIn(plan).length == 1, plan)
+    assert(plan.contains("StringStartsWith(term,which)"), plan)
+    assert(plan.contains("StringStartsWith(term,would)"), plan)
+    assert("PartitionFilters: \\[[^\\]]*letter".r.findAllIn(plan).nonEmpty, plan)
+    searcher.close()
+  }
+
   test("count search plan: coarse predicate on the postings scan too") {
     val searcher = new Searcher(spark, new IndexStore(indexDir), conf)
     val plan = formatted(searcher.searchCount("\"which\" AND would"))

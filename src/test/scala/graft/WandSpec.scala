@@ -77,4 +77,80 @@ class WandSpec extends SparkTestBase {
     assert(all.map(_.doc_id).sorted == (0L until 100L))
     assert(all.map(_.score).distinct.length == 1) // identical tf/dl → same score
   }
+
+  /** Every doc's score with [[Wand.runShard]]'s arithmetic: per word
+    * weight × tfNorm, summed in word order from 0.0. */
+  private def exactScores(words: Seq[(String, Double, Seq[Codec.Posting])],
+      avgdl: Double): Map[Long, Double] = {
+    val scores = scala.collection.mutable.HashMap.empty[Long, Double]
+    for ((_, w, ps) <- words.sortBy(_._1); p <- ps) {
+      val tn = p.tf * (k1 + 1) / (p.tf + k1 * (1 - b + b * (p.dl / avgdl)))
+      scores.update(p.docId, scores.getOrElse(p.docId, 0.0) + w * tn)
+    }
+    scores.toMap
+  }
+
+  test("runShard with a keyset floor matches brute force (200 seeded cases)") {
+    val rnd = new scala.util.Random(1117)
+    val order: Ordering[(Long, Double)] = Ordering.by { case (d, s) => (-s, d) }
+    var tieCases = 0
+    for (c <- 0 until 200) {
+      val nWords = 1 + rnd.nextInt(3)
+      val span = 40L + rnd.nextInt(300)
+      val avgdl = 5.0 + rnd.nextInt(20)
+      // few distinct (tf, dl) pairs, so equal scores are common
+      val words = (0 until nWords).map { wi =>
+        val df = 1 + rnd.nextInt(40)
+        val docs = rnd.shuffle((0L until span).toList).take(df).sorted
+        val ps = docs.map(d =>
+          Codec.Posting(d, 1 + rnd.nextInt(2), 10 * (1 + rnd.nextInt(2))))
+        (s"word$wi", 0.1 + rnd.nextDouble() * 3, ps)
+      }
+      val rows = words.flatMap { case (w, weight, ps) =>
+        ps.grouped(1 + rnd.nextInt(ps.length)).map(ch =>
+          ShardRow(0, w, weight, ch.head.docId, Codec.encode(ch, 4))).toSeq
+      }
+      val scores = exactScores(words, avgdl)
+      val ranked = scores.toSeq.sorted(order)
+      // the shard-computed cursor score equals the un-floored run's score
+      val unfloored = Wand.runShard(rows.iterator, 0L, span, k1, b, avgdl,
+        scores.size).map(x => x.doc_id -> x.score).toMap
+      assert(unfloored == scores, s"case $c: exact scores")
+      for ((d, sc) <- scores)
+        assert(Wand.cursorScore(rows.iterator, d, k1, b, avgdl) == Some(sc),
+          s"case $c doc $d")
+      val missing = (0L until span).find(d => !scores.contains(d))
+      missing.foreach(d =>
+        assert(Wand.cursorScore(rows.iterator, d, k1, b, avgdl).isEmpty))
+
+      // floors: inside a tie group, above every doc, below every doc, and
+      // on a tombstoned doc
+      val tied = ranked.indices.dropRight(1)
+        .filter(i => ranked(i)._2 == ranked(i + 1)._2)
+      if (tied.nonEmpty) tieCases += 1
+      val tieFloor =
+        if (tied.isEmpty) ranked.head else ranked(tied(rnd.nextInt(tied.length)))
+      val deadFloor = ranked(rnd.nextInt(ranked.length))
+      val exclude = (deadFloor._1 +: ranked.map(_._1).filter(_ => rnd.nextInt(5) == 0))
+        .distinct.sorted.toArray
+      val floors = Seq(
+        (tieFloor._2, tieFloor._1, Array.emptyLongArray),
+        (Double.MaxValue, 0L, Array.emptyLongArray),
+        (ranked.last._2, ranked.last._1, Array.emptyLongArray),
+        (deadFloor._2, deadFloor._1, exclude))
+      val lo = rnd.nextInt(span.toInt / 2).toLong
+      val hi = lo + 1 + rnd.nextInt(span.toInt)
+      val k = 1 + rnd.nextInt(8)
+      for ((fv, fa, ex) <- floors) {
+        val got = Wand.runShard(rows.iterator, lo, hi, k1, b, avgdl, k, ex,
+          Some((fv, fa))).map(x => (x.doc_id, x.score)).toSeq.sorted(order)
+        val expected = ranked.filter { case (d, s) =>
+          d >= lo && d < hi && !ex.contains(d) &&
+            (s < fv || (s == fv && d > fa))
+        }.take(k)
+        assert(got == expected, s"case $c floor ($fv, $fa) k=$k [$lo, $hi)")
+      }
+    }
+    assert(tieCases > 100, s"only $tieCases cases with a tie group")
+  }
 }
